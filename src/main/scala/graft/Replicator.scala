@@ -294,14 +294,7 @@ object Replicator {
               exporter.queryRows("SELECT pg_export_snapshot()")
                 .headOption.flatMap(_.headOption.flatten)
             }
-          val leaves = exporter.queryRows(
-            s"""SELECT p.relid::regclass::text, c.relpages,
-               |       GREATEST(c.reltuples, 0)::bigint
-               |FROM pg_partition_tree('$qualified') p
-               |JOIN pg_class c ON c.oid = p.relid
-               |WHERE p.isleaf""".stripMargin)
-            .map(r => SnapshotScan.LeafStats(r(0).get,
-              r(1).get.toLong, r(2).get.toLong))
+          val leaves = SnapshotScan.leafStats(qualified, exporter.queryRows)
           val workers = get("pipeline.maxTableSyncWorkers", "4").toInt
           val units = SnapshotScan.planTable(leaves, workers)
           val cols = t.replicatedColumns.map(_.name)

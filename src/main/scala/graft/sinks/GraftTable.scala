@@ -1553,9 +1553,27 @@ final class GraftTable(val root: String, val keyCols: Seq[String],
   private def affectedBaseBytes(m: Manifest, buckets: Seq[Int]): Long =
     buckets.iterator.flatMap(b => m.files.getOrElse(b, Nil) ++
         m.layers.iterator.flatMap(_.ups.getOrElse(b, Nil)))
-      .map(f => try Files.size(Paths.get(resolved(f)))
-        catch { case _: java.io.IOException => 0L })
-      .sum
+      .map(fileBytes).sum
+
+  /** Size of a manifest-relative data file; a vanished file (racing
+    * vacuum) counts 0. */
+  private def fileBytes(f: String): Long =
+    try Files.size(Paths.get(resolved(f)))
+    catch { case _: java.io.IOException => 0L }
+
+  /** Whether the live data files of the CURRENT snapshot (base files
+    * and merge-on-read layer files) add up to fewer than `limit` bytes.
+    * Stats files only until the running sum reaches `limit`, so the
+    * answer costs O(files below the limit) at any table size. No
+    * snapshot yet = 0 bytes. */
+  def liveBytesBelow(limit: Long): Boolean = {
+    val m = currentManifest().getOrElse(return true)
+    val files = m.files.valuesIterator.flatten ++
+      m.layers.iterator.flatMap(l =>
+        l.ups.valuesIterator.flatten ++ l.del.valuesIterator.flatten)
+    var sum = 0L
+    files.forall { f => sum += fileBytes(f); sum < limit }
+  }
 
   /** Monotonically advance the replay high-water mark (used with
     * `merge(..., advanceHw = false)` once every group of a batch is
@@ -1689,11 +1707,9 @@ final class GraftTable(val root: String, val keyCols: Seq[String],
     val m = currentManifest()
       .getOrElse(return GraftTable.LayerPressure(0, 0L, 0.0))
     if (m.layers.isEmpty) return GraftTable.LayerPressure(0, 0L, 0.0)
-    def sz(f: String) = try Files.size(Paths.get(resolved(f)))
-      catch { case _: java.io.IOException => 0L }
     val bytes = m.layers.iterator.flatMap(l =>
       l.ups.valuesIterator.flatten ++ l.del.valuesIterator.flatten)
-      .map(sz).sum
+      .map(fileBytes).sum
     val delRows = m.layers.iterator.flatMap(_.del.valuesIterator.flatten)
       .map(f => GraftTable.footerRowCount(resolved(f))).sum
     val frac =
@@ -1714,11 +1730,9 @@ final class GraftTable(val root: String, val keyCols: Seq[String],
   def basePressure: GraftTable.BasePressure = {
     val m = currentManifest()
       .getOrElse(return GraftTable.BasePressure(0, 0L, 0))
-    def sz(f: String) = try Files.size(Paths.get(resolved(f)))
-      catch { case _: java.io.IOException => 0L }
     val occupied = m.files.filter(_._2.nonEmpty)
     GraftTable.BasePressure(occupied.valuesIterator.map(_.size).sum,
-      occupied.valuesIterator.flatten.map(sz).sum, occupied.size)
+      occupied.valuesIterator.flatten.map(fileBytes).sum, occupied.size)
   }
 
   /** Z-ORDER clustering maintenance (the `OPTIMIZE ZORDER BY` shape):
@@ -2379,8 +2393,20 @@ object GraftTable {
 
   /** One shared Configuration for footer reads: constructing one parses
     * the Hadoop XML defaults (~10 ms) — per-call construction dominated
-    * the whole harvest and taxed every merge commit. */
+    * the whole harvest and taxed every merge commit. It must reach the
+    * reader through explicit read options: `ParquetFileReader.open(in)`
+    * alone builds plain `ParquetReadOptions`, which create (and parse)
+    * a fresh Configuration per footer. */
   private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
+  private lazy val footerReadOptions =
+    org.apache.parquet.HadoopReadOptions.builder(footerConf).build()
+
+  /** Open one parquet file for a footer read with the shared conf. */
+  private def openFooter(path: String) =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), footerConf),
+      footerReadOptions)
 
   /** Fast pre-check from the manifest's schema DDL: harvest only
     * columns whose parquet stats we can use as long ranges (integral
@@ -2449,14 +2475,10 @@ object GraftTable {
     * max truncated + last-char increment ([[truncateUpper]]). */
   private[sinks] def footerStrRanges(path: String,
       cols: Seq[String]): Map[String, (String, String)] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.io.api.Binary
     import scala.jdk.CollectionConverters._
     try {
-      val in = HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path), footerConf)
-      val r = ParquetFileReader.open(in)
+      val r = openFooter(path)
       try {
         val blocks = r.getFooter.getBlocks.asScala
         cols.flatMap { col =>
@@ -2495,12 +2517,9 @@ object GraftTable {
     * metadata read, no Spark job. Unreadable file → 0 (callers use the
     * count for maintenance TRIGGERS, where under-counting is safe). */
   private[sinks] def footerRowCount(path: String): Long = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
     try {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path), footerConf))
+      val r = openFooter(path)
       try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
       finally r.close()
     } catch { case scala.util.control.NonFatal(_) => 0L }
@@ -2512,13 +2531,9 @@ object GraftTable {
     * statistics for it (absence = caller must not skip on it). */
   private[sinks] def footerRanges(path: String,
       cols: Seq[String]): Map[String, (Long, Long)] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
     try {
-      val in = HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path), footerConf)
-      val r = ParquetFileReader.open(in)
+      val r = openFooter(path)
       try {
         val blocks = r.getFooter.getBlocks.asScala
         cols.flatMap { col =>

@@ -29,12 +29,17 @@ object SnapshotScan {
   val TargetRowsPerRange = 250000L
   val MaxRangesPerTable = 1024
 
-  /** A half-open heap-block range [startBlock, endBlock). */
+  /** A half-open heap-block range [startBlock, endBlock). An `endBlock`
+    * of `Long.MaxValue` marks the open-ended last range: it also covers
+    * blocks the table grew after its stats were read. */
   final case class CtidRange(startBlock: Long, endBlock: Long) {
     def blocks: Long = endBlock - startBlock
-    /** Postgres predicate over the physical row id. */
+    /** Postgres predicate over the physical row id. The open-ended range
+      * has no upper bound: a block number is 32-bit on the server, which
+      * rejects `'(9223372036854775807,0)'::tid`. */
     def predicate: String =
-      s"ctid >= '($startBlock,0)'::tid AND ctid < '($endBlock,0)'::tid"
+      if (endBlock == Long.MaxValue) s"ctid >= '($startBlock,0)'::tid"
+      else s"ctid >= '($startBlock,0)'::tid AND ctid < '($endBlock,0)'::tid"
   }
 
   /** Plan ranges for one physical table. Mirrors the reference math:
@@ -63,6 +68,28 @@ object SnapshotScan {
   /** Physical-table stats (from pg_class / pg_partition_tree). */
   final case class LeafStats(qualifiedName: String, relpages: Long,
       reltuples: Long)
+
+  /** The leaves of `qualified` with their pg_class stats, read through
+    * `query` (SQL → rows of nullable text cells). `pg_partition_tree`
+    * returns no rows for a plain, unpartitioned table, so an empty tree
+    * falls back to the table itself — unless it is a partitioned table
+    * (relkind 'p', no storage) that has no partitions yet. */
+  def leafStats(qualified: String,
+      query: String => Seq[Seq[Option[String]]]): Seq[LeafStats] = {
+    val stats =
+      """SELECT c.oid::regclass::text, c.relpages,
+        |       GREATEST(c.reltuples, 0)::bigint
+        |FROM pg_class c""".stripMargin
+    val leaves = query(
+      s"""$stats
+         |JOIN pg_partition_tree('$qualified') p ON c.oid = p.relid
+         |WHERE p.isleaf""".stripMargin)
+    val rows =
+      if (leaves.nonEmpty) leaves
+      else query(
+        s"$stats\nWHERE c.oid = '$qualified'::regclass AND c.relkind <> 'p'")
+    rows.map(r => LeafStats(r(0).get, r(1).get.toLong, r(2).get.toLong))
+  }
 
   /** A planned scan unit: one leaf × one CTID range. For partitioned
     * tables the reference plans each LEAF separately (copy.rs:457-466) —

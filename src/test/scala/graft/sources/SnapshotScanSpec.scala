@@ -50,6 +50,42 @@ class SnapshotScanSpec extends AnyFunSuite {
       """SELECT "id", "name" FROM public.users WHERE ctid >= '(10,0)'::tid AND ctid < '(20,0)'::tid AND (active = true)""")
   }
 
+  test("the open-ended last range renders no upper bound") {
+    // a tid block number is 32-bit: '(9223372036854775807,0)'::tid is
+    // rejected by the server, so the last range must not render one
+    val last = planRanges(1000, 5000000, 4).find(_.endBlock == Long.MaxValue)
+      .getOrElse(fail("no open-ended range"))
+    assert(last.predicate == s"ctid >= '(${last.startBlock},0)'::tid")
+    assert(planRanges(0, 0, 4).map(_.predicate) == Seq("ctid >= '(0,0)'::tid"))
+    assert(!selectSql(ScanUnit("public.users", last), Seq("id"), None)
+      .contains(Long.MaxValue.toString))
+  }
+
+  test("leaf stats: a plain table (empty pg_partition_tree) plans itself") {
+    val asked = Seq.newBuilder[String]
+    def pg(tree: Seq[Seq[Option[String]]],
+        self: Seq[Seq[Option[String]]])(sql: String) = {
+      asked += sql
+      if (sql.contains("pg_partition_tree")) tree else self
+    }
+    val plain = leafStats("public.users",
+      pg(Nil, Seq(Seq(Some("users"), Some("7"), Some("900")))))
+    assert(plain == Seq(LeafStats("users", 7, 900)))
+    // the fallback names the table itself and skips a partitioned root
+    // that has no partitions yet
+    val self = asked.result().last
+    assert(self.contains("'public.users'::regclass") &&
+      self.contains("relkind <> 'p'"), self)
+    assert(planTable(plain, workers = 1).nonEmpty)
+    // a partitioned table plans its leaves and never asks for itself
+    val before = asked.result().size
+    val parted = leafStats("public.t", pg(
+      Seq(Seq(Some("t_1"), Some("3"), Some("10")),
+        Seq(Some("t_2"), Some("4"), Some("20"))), Nil))
+    assert(parted.map(_.qualifiedName) == Seq("t_1", "t_2"))
+    assert(asked.result().size == before + 1)
+  }
+
   test("jdbc predicates: one per range, filter conjoined") {
     val preds = jdbcPredicates(Seq(LeafStats("t", 100, 1000)), 2,
       Some("x > 0"))

@@ -6,7 +6,7 @@ Accepts either a bench log (finds the per-query JSON line) or an archived
 BENCH_*.json whose "tail"/"parsed" holds the line. Prints per-query
 ratio B/A sorted by |log ratio| descending, plus pin-gate drift.
 """
-import json, re, sys
+import json, math, re, sys
 
 PINS = ["q1_agg", "q5_join", "semi_anti", "setops", "q18_topk", "dedup_jaccard"]
 
@@ -61,8 +61,10 @@ def main():
     a, b = load(sys.argv[1]), load(sys.argv[2])
     qa, qb = a["queries"], b["queries"]
     common = [k for k in qa if k in qb and qa[k] > 0 and qb[k] > 0]
-    rows = sorted(common, key=lambda k: qb[k] / qa[k], reverse=True)
-    import math
+    if not common:
+        sys.exit(f"{sys.argv[1]} and {sys.argv[2]} share no timed queries")
+    rows = sorted(common, key=lambda k: abs(math.log(qb[k] / qa[k])),
+                  reverse=True)
     geo = math.exp(sum(math.log(qb[k] / qa[k]) for k in common) / len(common))
     print(f"A total={a.get('value')} noise={a.get('noise_index')}  "
           f"B total={b.get('value')} noise={b.get('noise_index')}")
@@ -70,7 +72,8 @@ def main():
     pins = [k for k in PINS if k in common]
     if pins:
         pr = sorted(qb[k] / qa[k] for k in pins)
-        med = pr[len(pr) // 2]
+        mid = len(pr) // 2
+        med = pr[mid] if len(pr) % 2 else (pr[mid - 1] + pr[mid]) / 2
         print("pin drift B/A: " + " ".join(
             f"{k}={qb[k]/qa[k]:.2f}" for k in PINS if k in common) +
             f"  median={med:.2f}")
