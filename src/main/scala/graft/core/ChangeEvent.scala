@@ -38,13 +38,5 @@ object ChangeEvent {
     StructField("_tx_ordinal", LongType, nullable = false),
     StructField("_schema_lsn", LongType, nullable = false))
 
-  /** Full envelope schema for a given payload row schema. */
-  def envelopeSchema(payload: StructType): StructType =
-    StructType(metaFields ++ Seq(
-      StructField("before", payload, nullable = true),
-      StructField("after", payload, nullable = true),
-      StructField("_missing", ArrayType(StringType, containsNull = false),
-        nullable = true)))
-
   val metaColumns: Seq[String] = metaFields.map(_.name)
 }

@@ -75,7 +75,6 @@ final case class ColumnChange(ordinal: Int, from: ColumnSpec,
     * (tightening an existing destination column can't be guaranteed —
     * the reference warns and keeps it nullable, bigquery/core.rs:884). */
   def nullabilityRelaxed: Boolean = !from.nullable && to.nullable
-  def nullabilityTightened: Boolean = from.nullable && !to.nullable
   def defaultChanged: Boolean = from.default != to.default
   def typeChanged: Boolean =
     from.pgType != to.pgType || from.modifier != to.modifier

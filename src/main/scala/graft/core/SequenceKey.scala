@@ -1,5 +1,8 @@
 package graft.core
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{concat, hex, lit, lower, lpad}
+
 /** Total-order key for change events.
   *
   * Mirrors the reference's `EventSequenceKey {commit_lsn, tx_ordinal}`
@@ -27,6 +30,15 @@ final case class SequenceKey(commitLsn: Long, txOrdinal: Long)
 }
 
 object SequenceKey {
+  /** [[SequenceKey.packedHex]] as a Spark column over the two long
+    * columns: bit-identical to it for every value (negative longs render
+    * as their unsigned 64-bit hex, like `%016x`), since manifests and
+    * high-water marks persist the string. Lowercase: mixed-case hex
+    * would corrupt the lexicographic order ('a' > 'B'). */
+  def packedHexCol(commitLsn: Column, txOrdinal: Column): Column =
+    concat(lpad(lower(hex(commitLsn)), 16, "0"), lit("/"),
+      lpad(lower(hex(txOrdinal)), 16, "0"))
+
   /** Parse the `"{commit:016x}/{ordinal:016x}"` form. */
   def fromPackedHex(s: String): SequenceKey = {
     val i = s.indexOf('/')

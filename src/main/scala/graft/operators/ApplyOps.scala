@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,11 +14,6 @@ import org.apache.spark.sql.functions._
   * which is exactly the 100 TB shape (SURVEY §7.5.6).
   */
 object ApplyOps {
-
-  /** Sequence-key column expression: orders events like the reference's
-    * `EventSequenceKey {commit_lsn, tx_ordinal}` (event.rs:321-341). */
-  def seqKey(df: DataFrame): Column =
-    struct(df("_commit_lsn"), df("_tx_ordinal"))
 
   /** Last-writer-wins dedup (A1): keep, per primary key, the row with the
     * highest sequence key — the Spark form of BigQuery

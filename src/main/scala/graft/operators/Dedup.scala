@@ -414,8 +414,10 @@ object Dedup {
     * [[connectedComponentsStats]] loop runs. Both produce the identical
     * (id, rep = component minimum) rows.
     *
-    * Only ids that appear in `pairs` are emitted; callers left-join and
-    * coalesce(rep, id) to cover singleton documents. */
+    * Only ids that appear in a non-degenerate pair are emitted: an id
+    * seen only in self-loop pairs (a = b) or beside a null id is not.
+    * Callers left-join and coalesce(rep, id) to cover such ids and
+    * singleton documents. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxRounds: Int = 50, localEdgeCap: Int = LocalEdgeCap): DataFrame = {
     // materialize the (expensive) upstream pair plan exactly ONCE —

@@ -25,12 +25,6 @@ object Multimodal {
     * codec here; the fake is deterministic in the payload bytes so tests
     * and oracles are stable. */
   object MediaCodec {
-    /** "Decode" fixed-dimension metadata from a fake media payload. */
-    def sniffDims(bytes: Array[Byte]): (Int, Int) = {
-      val n = bytes.length
-      (320 + (n % 320), 240 + (n % 240))
-    }
-
     /** "Feature-extract": d-dim float vector from byte statistics —
       * deterministic stand-in for an embedding model forward pass. */
     def features(bytes: Array[Byte], d: Int): Array[Float] = {

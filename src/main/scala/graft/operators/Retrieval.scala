@@ -42,10 +42,12 @@ object Retrieval {
     * does). */
   val ProbeScaleThresholdBytes: Long = 4L << 30
 
-  private def probeScaleLane(docs: DataFrame): Boolean = {
-    val thr = docs.sparkSession.conf
-      .getOption("spark.graft.bm25.probeScaleThresholdBytes")
-      .map(_.toLong).getOrElse(ProbeScaleThresholdBytes)
+  private[operators] def probeScaleLane(docs: DataFrame): Boolean = {
+    val key = "spark.graft.bm25.probeScaleThresholdBytes"
+    val thr = docs.sparkSession.conf.getOption(key).map { v =>
+      v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$key must be a whole number of bytes, got '$v'"))
+    }.getOrElse(ProbeScaleThresholdBytes)
     docs.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(thr)
   }
 

@@ -1,6 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.SequenceKey
 import graft.operators.ApplyOps
 import org.apache.spark.sql.functions._
 
@@ -246,7 +247,8 @@ final class CurrentStateSink(rootDir: String, keysOf: String => Seq[String],
     tableFor(table).liveBytesBelow(CurrentStateSink.InterpretedBelowBytes)
 
   /** [[writeEvents]] with the lane forced (`interpreted` = Some) or
-    * chosen by [[interpretedLane]] (None).
+    * chosen by [[interpretedLane]] (None), and the merges' copy-on-write
+    * lane bounds (`lanes`; specs force those lanes through it).
     *
     * Lanes: a small destination applies the whole batch — decode, LWW,
     * PK-change expansion, the merge's stats job, the bucket rewrite and
@@ -259,7 +261,8 @@ final class CurrentStateSink(rootDir: String, keysOf: String => Seq[String],
     * plans: interpreting a table-scale rewrite costs more than the
     * compile saves. The caller's session is never changed. */
   private[graft] def applyEvents(table: String, events0: DataFrame,
-      maskHint: Option[Boolean], interpreted: Option[Boolean]): Unit = {
+      maskHint: Option[Boolean], interpreted: Option[Boolean],
+      lanes: GraftTable.CowLanes = GraftTable.CowLanes()): Unit = {
     val t = tableFor(table)
     // pause point: wait out a foreign maintenance lease before merging
     // (the reference's pause/resume around external maintenance)
@@ -279,7 +282,8 @@ final class CurrentStateSink(rootDir: String, keysOf: String => Seq[String],
       val deduped = ApplyOps.lastWriterWins(
         events.drop("_missing"), t.keyCols,
         Seq("_commit_lsn", "_tx_ordinal"))
-      retryOnConflict(t.merge(seqed(deduped)))
+      retryOnConflict(t.merge(seqed(deduped), Nil,
+        skipReplayFilter = false, advanceHw = true, lanes))
       noteApplied(table, events.sparkSession)
       return
     }
@@ -312,19 +316,17 @@ final class CurrentStateSink(rootDir: String, keysOf: String => Seq[String],
         // hw advances only after ALL groups are durable (crash between
         // groups + replay must redeliver the whole batch)
         retryOnConflict(
-          t.merge(group, cols, skipReplayFilter = true, advanceHw = false))
+          t.merge(group, cols, skipReplayFilter = true, advanceHw = false,
+            lanes))
       }
       retryOnConflict(t.advanceHighWater(batchMax))
       noteApplied(table, events.sparkSession)
     } finally fresh.unpersist()
   }
 
-  /** lowercase to match SequenceKey.packedHex — mixed-case hex would
-    * corrupt lexicographic ordering ('a' > 'B') */
   private def seqed(df: DataFrame): DataFrame =
     df.withColumn("_seq",
-      concat(lpad(lower(hex(col("_commit_lsn"))), 16, "0"), lit("/"),
-             lpad(lower(hex(col("_tx_ordinal"))), 16, "0")))
+      SequenceKey.packedHexCol(col("_commit_lsn"), col("_tx_ordinal")))
       .drop("_commit_lsn", "_tx_ordinal")
 
   override def truncateTable(table: String): Unit = tableFor(table).truncate()
@@ -449,8 +451,7 @@ final class ChangelogSink(rootDir: String) extends CdcSink {
   override def writeEvents(table: String, events: DataFrame): Unit = {
     val hw = readHw(table)
     val withSeq = events.withColumn("sequence_number",
-        concat(lpad(lower(hex(col("_commit_lsn"))), 16, "0"), lit("/"),
-               lpad(lower(hex(col("_tx_ordinal"))), 16, "0")))
+        SequenceKey.packedHexCol(col("_commit_lsn"), col("_tx_ordinal")))
       .withColumnRenamed("_op", "cdc_operation")
       .drop("_commit_lsn", "_tx_ordinal")
     val fresh = (if (hw.isEmpty) withSeq

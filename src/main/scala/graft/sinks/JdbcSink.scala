@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.SequenceKey
 import graft.operators.ApplyOps
 
 /** External-engine CDC sink: applies the pipeline's change stream to a
@@ -138,8 +139,7 @@ final class JdbcSink(url: String, keysOf: String => Seq[String],
 
     val hw = withConn(readHighWater(_, table))
     val seqed = resolved.withColumn(SeqCol,
-        concat(lpad(lower(hex(col("_commit_lsn"))), 16, "0"), lit("/"),
-               lpad(lower(hex(col("_tx_ordinal"))), 16, "0")))
+        SequenceKey.packedHexCol(col("_commit_lsn"), col("_tx_ordinal")))
       .drop("_commit_lsn", "_tx_ordinal")
     val fresh0 = if (hw.isEmpty) seqed
                  else seqed.filter(col(SeqCol) > lit(hw))

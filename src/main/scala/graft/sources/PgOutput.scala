@@ -554,7 +554,6 @@ object PgOutput {
     private val offsets = scala.collection.mutable.ArrayBuffer.empty[Long]
     private val subStart =
       scala.collection.mutable.LinkedHashMap.empty[Int, Int]
-    def frameCount: Int = offsets.length
     def append(subXid: Int, frame: Array[Byte]): Unit =
       try {
         if (!subStart.contains(subXid)) subStart(subXid) = offsets.length

@@ -38,6 +38,22 @@ class SequenceKeySpec extends AnyFunSuite with PropSpec {
   }
 }
 
+class SequenceKeyColumnSpec extends graft.SparkSpec {
+  import spark.implicits._
+
+  test("packedHexCol renders exactly packedHex, negative longs included") {
+    val vals = Seq(0L, Long.MaxValue, -1L, Long.MinValue, -0x1234L, 42L)
+    val pairs = for (c <- vals; o <- vals) yield (c, o)
+    val got = pairs.toDF("c", "o")
+      .select($"c", $"o", SequenceKey.packedHexCol($"c", $"o"))
+      .as[(Long, Long, String)].collect()
+    assert(got.length == pairs.size)
+    got.foreach { case (c, o, s) =>
+      assert(s == SequenceKey(c, o).packedHex, s"($c, $o)")
+    }
+  }
+}
+
 class SchemaSpec extends AnyFunSuite with PropSpec {
   import org.apache.spark.sql.types._
 

@@ -215,6 +215,18 @@ class DedupSpec extends SparkSpec {
     assert(local == dist)
   }
 
+  test("connectedComponents emits no node seen only in self-loop pairs, " +
+      "on either path") {
+    // 7 appears only as (7, 7); 1-2 is a real edge and 2-2 a self-loop
+    // beside it
+    val df = Seq((1L, 2L), (7L, 7L), (2L, 2L)).toDF("id_a", "id_b")
+    Seq(Dedup.LocalEdgeCap, 0).foreach { cap =>
+      val got = Dedup.connectedComponents(df, "id_a", "id_b",
+        localEdgeCap = cap).as[(Long, Long)].collect().toSet
+      assert(got == Set((1L, 1L), (2L, 1L)), s"cap $cap: $got")
+    }
+  }
+
   test("substringDedup removes covered dup spans, keeps global first") {
     val d = Seq(
       (1L, "a b c d e f g"),   // holds the first occurrences

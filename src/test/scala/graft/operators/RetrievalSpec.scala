@@ -78,6 +78,18 @@ class RetrievalSpec extends SparkSpec {
       .unset("spark.graft.bm25.probeScaleThresholdBytes")
   }
 
+  test("a malformed probe-scale threshold fails naming its key") {
+    val key = "spark.graft.bm25.probeScaleThresholdBytes"
+    val docs = Seq((1L, Seq("a"))).toDF("doc_id", "toks")
+    withSqlConf(key -> "4g") {
+      val e = intercept[IllegalArgumentException](
+        Retrieval.probeScaleLane(docs))
+      assert(e.getMessage.contains(key) && e.getMessage.contains("4g"),
+        e.getMessage)
+    }
+    withSqlConf(key -> "0")(assert(Retrieval.probeScaleLane(docs)))
+  }
+
   test("bm25TopK matches the driver reference on random corpora") {
     val rnd = new scala.util.Random(42)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "eps",

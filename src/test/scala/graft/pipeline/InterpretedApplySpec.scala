@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.SparkSpec
 import graft.core.{ColumnSpec, SchemaRegistry, TableSchemaV}
-import graft.sinks.{CdcSink, CurrentStateSink}
+import graft.sinks.{CdcSink, CurrentStateSink, GraftTable}
 import graft.sources.CdcLogSource
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
@@ -10,11 +10,14 @@ import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-/** The current-state sink's interpreted small-table lane: batches for a
+/** The current-state sink's small-destination lanes. Batches for a
   * destination below [[CurrentStateSink.InterpretedBelowBytes]] of live
   * files apply in an interpreted clone of their session, so a steady
-  * stream compiles nothing; larger destinations keep compiled plans;
-  * both lanes write the same tables. */
+  * stream compiles nothing; larger destinations keep compiled plans. A
+  * copy-on-write merge collects a batch of at most
+  * [[GraftTable.LocalBatchMaxRows]] rows once instead of caching it, and
+  * rewrites small destinations in one task. Every lane writes the same
+  * tables. */
 class InterpretedApplySpec extends SparkSpec {
   import spark.implicits._
 
@@ -62,14 +65,15 @@ class InterpretedApplySpec extends SparkSpec {
 
   /** A [[CurrentStateSink]] with every batch's lane forced. */
   private final class ForcedLane(val inner: CurrentStateSink,
-      interpreted: Boolean) extends CdcSink {
+      interpreted: Boolean,
+      lanes: GraftTable.CowLanes = GraftTable.CowLanes()) extends CdcSink {
     override def writeTableRows(table: String, rows: DataFrame): Unit =
       inner.writeTableRows(table, rows)
     override def writeEvents(table: String, events: DataFrame): Unit =
       writeEvents(table, events, None)
     override def writeEvents(table: String, events: DataFrame,
         maskHint: Option[Boolean]): Unit =
-      inner.applyEvents(table, events, maskHint, Some(interpreted))
+      inner.applyEvents(table, events, maskHint, Some(interpreted), lanes)
     override def truncateTable(table: String): Unit =
       inner.truncateTable(table)
   }
@@ -121,9 +125,9 @@ class InterpretedApplySpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.codegen.wholeStage") == "true")
   }
 
-  test("interpreted and compiled lanes write identical tables and " +
-      "high-water marks") {
-    val lines = Seq(
+  /** A stream over upserts, deletes, a key-changing update, a
+    * TOAST-masked update and a truncate, in three batches. */
+  private val laneLines = Seq(
       steadyBatch(0),
       Seq(
         // key-changing update: id 3 → 500
@@ -144,30 +148,37 @@ class InterpretedApplySpec extends SparkSpec {
         branch("I", 302L, 0, 9L, 9000L),
         user("I", 303L, 0, 42L, "late", 42)))
 
-    def run(interpreted: Boolean) = {
-      val dir = tmp(s"interp-eq-$interpreted")
-      val log = s"$dir/wal.log"
-      val sink = new ForcedLane(
-        new CurrentStateSink(s"$dir/tables", keysOf, 4), interpreted)
-      val p = pipeline(dir, sink)
-      appendLog(log, lines.head)
-      val q = p.startStream(log)
-      try lines.tail.foreach { batch =>
-        q.processAllAvailable()
-        appendLog(log, batch)
-      } finally {
-        q.processAllAvailable()
-        q.stop()
-      }
-      Seq("users", "branches").map { t =>
-        val df = sink.inner.read(spark, t)
-        (df.collect().map(_.toSeq).toSet,
-          sink.inner.tableFor(t).readMeta().highWater)
-      }
+  /** Streams [[laneLines]] with the lanes forced: every merge runs with
+    * the copy-on-write lane bounds `lanes`. Returns each table's rows and
+    * high-water mark, and whether every bucket holds exactly one file. */
+  private def runLanes(interpreted: Boolean,
+      lanes: GraftTable.CowLanes = GraftTable.CowLanes()) = {
+    val dir = tmp(s"lanes-$interpreted")
+    val log = s"$dir/wal.log"
+    val sink = new ForcedLane(
+      new CurrentStateSink(s"$dir/tables", keysOf, 4), interpreted, lanes)
+    val p = pipeline(dir, sink)
+    appendLog(log, laneLines.head)
+    val q = p.startStream(log)
+    try laneLines.tail.foreach { batch =>
+      q.processAllAvailable()
+      appendLog(log, batch)
+    } finally {
+      q.processAllAvailable()
+      q.stop()
     }
+    Seq("users", "branches").map { t =>
+      val table = sink.inner.tableFor(t)
+      (sink.inner.read(spark, t).collect().map(_.toSeq).toSet,
+        table.readMeta().highWater,
+        table.currentFilesByBucket.values.forall(_.size == 1))
+    }
+  }
 
-    val interp = run(interpreted = true)
-    val compiled = run(interpreted = false)
+  test("interpreted and compiled lanes write identical tables and " +
+      "high-water marks") {
+    val interp = runLanes(interpreted = true)
+    val compiled = runLanes(interpreted = false)
     assert(interp == compiled)
     val usersRows = interp.head._1
     assert(usersRows.exists(_ == Seq(500L, "moved", 3)))
@@ -176,6 +187,22 @@ class InterpretedApplySpec extends SparkSpec {
     assert(usersRows.exists(_ == Seq(4L, "v0", 99)), usersRows)
     assert(interp(1)._1 == Set(Seq(9L, 9000L, "b9")))
     assert(interp.forall(_._2.nonEmpty))
+  }
+
+  test("local and cached batches, one-task and parallel rewrites write " +
+      "identical tables, high-water marks and one file per bucket") {
+    // a cached batch's size is unknown, so it never rewrites in one task
+    def lanes(local: Boolean, oneTask: Boolean) = GraftTable.CowLanes(
+      localMaxRows = if (local) GraftTable.LocalBatchMaxRows else 0,
+      oneTaskBelowBytes = if (oneTask) Long.MaxValue else 0L)
+    val base = runLanes(interpreted = false, lanes(local = true, oneTask = true))
+    assert(base.forall(_._3), "a bucket holds more than one file")
+    assert(base.head._1.exists(_ == Seq(500L, "moved", 3)))
+    assert(base.head._1.exists(_ == Seq(4L, "v0", 99)), base.head._1)
+    assert(base(1)._1 == Set(Seq(9L, 9000L, "b9")))
+    for ((local, oneTask) <- Seq((true, false), (false, false)))
+      assert(runLanes(interpreted = false, lanes(local, oneTask)) == base,
+        s"local=$local oneTask=$oneTask")
   }
 
   test("the size rule keeps a destination above the crossover compiled") {

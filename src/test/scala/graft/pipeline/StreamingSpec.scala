@@ -57,10 +57,10 @@ class StreamingSpec extends SparkSpec {
     // Perf-shape tripwire for the round-4 apply consolidation: a
     // steady-state batch (Ready table, no gates/spool/masks) issues ONE
     // driver metadata aggregation plus the sink's merge jobs; AQE adds
-    // per-query-stage jobs on top (~10 total today, incl. the trailing
-    // empty trigger). Round 3 ran four extra per-concern driver collects
-    // (isEmpty/R/plan/maxLsn) plus a sink mask probe — ~15 jobs. The
-    // bound catches that class of regression without pinning AQE noise.
+    // per-query-stage jobs on top. The copy-on-write merge collects the
+    // batch once and rewrites the small table in one task: 7 jobs in
+    // all. Round 3 ran four extra per-concern driver collects
+    // (isEmpty/R/plan/maxLsn) plus a sink mask probe — ~15 jobs.
     val dir = tmp("cdc-jobs")
     val log = s"$dir/wal.log"
     appendLog(log, (1L to 3L).map(i => ins(i, 0, i, s"u$i", 20)))
@@ -83,7 +83,7 @@ class StreamingSpec extends SparkSpec {
       Thread.sleep(500) // let queued listener events drain
     } finally spark.sparkContext.removeSparkListener(listener)
     q.stop()
-    assert(jobs.get() <= 12,
+    assert(jobs.get() <= 7,
       s"steady-state micro-batch ran ${jobs.get()} jobs (apply-path " +
         "consolidation regressed?)")
     assert(sink.read(spark, "users").filter($"id" === 1L)

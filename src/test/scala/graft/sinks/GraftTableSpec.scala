@@ -44,6 +44,26 @@ class GraftTableSpec extends SparkSpec {
 
   private def countJobs(body: => Unit): Int = countBudget(body)._1
 
+  /** A merge with the copy-on-write lane bounds forced. */
+  private def mergeWith(t: GraftTable, b: org.apache.spark.sql.DataFrame,
+      lanes: GraftTable.CowLanes): Unit =
+    t.merge(b, Nil, skipReplayFilter = false, advanceHw = true, lanes)
+
+  /** Tasks of the last stage `body` submits: a merge's rewrite write. */
+  private def lastStageTasks(body: => Unit): Int = {
+    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+    val last = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        last.set(s.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.GraftTestBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    last.get
+  }
+
   test("merge job budget: bootstrap and merge-on-read commits cost ONE " +
       "Spark job (stats observed during the staged write, commit is " +
       "file moves — round-12 verdict item 1); empty replay costs one; " +
@@ -72,15 +92,142 @@ class GraftTableSpec extends SparkSpec {
       Set((1L, "a2"), (2L, "b")))
     val cow = new GraftTable(tmp(), Seq("id"), nBuckets = 4)
     cow.merge(batch((1L, "a", "I", 1L), (2L, "b", "I", 1L)))
-    val cowJobs = countJobs { cow.merge(batch((1L, "a2", "U", 2L))) }
-    // copy-on-write DELIBERATELY keeps the cached stats-then-rewrite
-    // shape (a parquet stage would be pure encode/decode overhead —
-    // its files are never adopted): one stats job + the rewrite's AQE
-    // broadcast/shuffle/write stage jobs. Pin the envelope.
-    assert(cowJobs <= 6, s"copy-on-write merge took $cowJobs jobs — " +
+    val (cowJobs, cowEx) = countBudget {
+      cow.merge(batch((1L, "a2", "U", 2L)))
+    }
+    // copy-on-write collects the batch once and rewrites from the
+    // driver's rows (a parquet stage would be pure encode/decode
+    // overhead — its files are never adopted): the collect and the
+    // write are the only SQL executions, and the jobs are the collect,
+    // the broadcast of the batch keys and one write job.
+    assert(cowEx == 2, s"copy-on-write merge ran $cowEx SQL executions, " +
+      "expected exactly the batch collect and the rewrite")
+    assert(cowJobs <= 3, s"copy-on-write merge took $cowJobs jobs — " +
       "an extra pass crept into the merge path")
     assert(cow.read(spark).as[(Long, String)].collect().toSet ==
       Set((1L, "a2"), (2L, "b")))
+  }
+
+  test("copy-on-write merge into a layered table collapses, then merges " +
+      "the batch it already collected: the batch is read once") {
+    val t = new GraftTable(tmp(), Seq("id"), nBuckets = 4,
+      mergeOnRead = true, morMinAffectedBytes = 0L)
+    t.merge(batch((1L, "a", "I", 1L), (2L, "b", "I", 1L), (3L, "c", "I", 1L)))
+    t.merge(batch((1L, "a2", "U", 2L)))
+    assert(t.hasLayers)
+    val reads = spark.sparkContext.longAccumulator("batch row reads")
+    val seen = udf { (id: Long) => reads.add(1); id }.asNondeterministic()
+    // a TOAST-masked merge takes the copy-on-write lane
+    val masked = batch((2L, null, "U", 3L), (4L, "d", "I", 3L))
+      .withColumn("id", seen(col("id")))
+    t.merge(masked, coalesceCols = Seq("v"))
+    assert(reads.value == 2L, s"the batch's rows were read ${reads.value} " +
+      "times over, expected once")
+    assert(!t.hasLayers)
+    assert(t.read(spark).as[(Long, String)].collect().toSet ==
+      Set((1L, "a2"), (2L, "b"), (3L, "c"), (4L, "d")))
+    assert(t.readMeta().highWater == seq(3L))
+  }
+
+  test("copy-on-write rewrites write the same files in one task as in " +
+      "parallel, from both merge lanes") {
+    def md5(f: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(Files.readAllBytes(java.nio.file.Paths.get(f))).toSeq
+    // (rows, high-water mark, bucket → content digests of its files)
+    def run(mergeOnRead: Boolean, oneTask: Boolean) = {
+      // merge-on-read at the default admission floor: these small
+      // merges take mergeStaged's copy-on-write branch
+      val t = new GraftTable(tmp(), Seq("id"), nBuckets = 4,
+        mergeOnRead = mergeOnRead)
+      val lanes = GraftTable.CowLanes(
+        oneTaskBelowBytes = if (oneTask) Long.MaxValue else 0L)
+      t.merge(batch((1L to 12L).map(i => (i, s"v$i", "I", 1L)): _*))
+      val before = t.currentFilesByBucket
+      mergeWith(t, batch((2L, "", "D", 2L), (5L, "v5b", "U", 2L),
+        (20L, "new", "I", 2L), (7L, "v7b", "U", 2L)), lanes)
+      assert(!t.hasLayers)
+      val byBucket = t.currentFilesByBucket
+      val rewritten = byBucket.filter { case (b, fs) => !before.get(b).contains(fs) }
+      assert(rewritten.nonEmpty && rewritten.values.forall(_.size == 1),
+        rewritten)
+      (t.read(spark).as[(Long, String)].collect().toSet,
+        t.readMeta().highWater,
+        byBucket.map { case (b, fs) =>
+          b -> fs.map(f => md5(t.resolved(f))).sortBy(_.toString) })
+    }
+    for (mor <- Seq(false, true)) {
+      val one = run(mor, oneTask = true)
+      assert(one == run(mor, oneTask = false), s"mergeOnRead=$mor")
+      assert(one._1.size == 12 && one._1((5L, "v5b")) &&
+        !one._1.exists(_._1 == 2L))
+    }
+  }
+
+  test("copy-on-write rewrites run in one task only when both the " +
+      "destination and the batch are small; a cached batch never does") {
+    val lanes = GraftTable.CowLanes(oneTaskBelowBytes = 64L << 10)
+    // 4,000 rows of 64 hex chars: ~0.5 MB as rows, ~0.2 MB staged
+    def big(lsn: Long) = spark.range(1, 4001).select(col("id"),
+      sha2(col("id").cast("string"), 256).as("v"), lit("U").as("_op"),
+      lit(seq(lsn)).as("_seq"))
+    val small = (1L to 8L).map(i => (i, s"v$i", "I", 1L))
+    for (mor <- Seq(false, true)) {
+      // merge-on-read at the default admission floor: these merges
+      // into a small table take mergeStaged's copy-on-write branch
+      val t = new GraftTable(tmp(), Seq("id"), nBuckets = 4,
+        mergeOnRead = mor)
+      t.merge(batch(small: _*))
+      assert(lastStageTasks(mergeWith(t,
+        batch(small.map(r => r.copy(_2 = r._2 + "b", _4 = 2L)): _*),
+        lanes)) == 1, s"mergeOnRead=$mor: small batch, small table")
+      assert(lastStageTasks(mergeWith(t, big(3L), lanes)) > 1,
+        s"mergeOnRead=$mor: a large batch into a small table ran in one task")
+      assert(t.read(spark).count() == 4000L)
+    }
+    val cached = new GraftTable(tmp(), Seq("id"), nBuckets = 4)
+    cached.merge(batch(small: _*))
+    assert(lastStageTasks(mergeWith(cached,
+      batch(small.map(r => r.copy(_2 = r._2 + "b", _4 = 2L)): _*),
+      GraftTable.CowLanes(localMaxRows = 0,
+        oneTaskBelowBytes = Long.MaxValue))) > 1,
+      "a cached batch was rewritten in one task")
+    assert(cached.read(spark).as[(Long, String)].collect().toSet ==
+      small.map(r => (r._1, r._2 + "b")).toSet)
+  }
+
+  test("copy-on-write merge of wide rows: the driver-local batch is " +
+      "bounded by bytes and ships in partitions of about 8 MiB; every " +
+      "lane writes the same table") {
+    // 24 rows of 512 KiB each: 12 MiB of batch
+    def wide(lsn: Long, tag: String) = spark.range(0, 24).select(
+      col("id"), concat(col("id").cast("string"), repeat(lit(tag), 1 << 19))
+        .as("v"), lit(if (lsn == 1L) "I" else "U").as("_op"),
+      lit(seq(lsn)).as("_seq"))
+    val bridge = org.apache.spark.sql.GraftLocalBridge
+    val rows = bridge.collectBounded(wide(1L, "a"),
+      GraftTable.LocalBatchMaxRows, GraftTable.LocalBatchMaxBytes)
+    assert(rows.map(_.length).contains(24))
+    val frame = bridge.localFrame(spark, wide(1L, "a").schema, rows.get)
+    val parts = frame.rdd.getNumPartitions
+    assert(parts >= 2 && 24 / parts * (512L << 10) <=
+      bridge.PartitionBytes, s"$parts partitions")
+    assert(frame.count() == 24L)
+    assert(bridge.collectBounded(wide(1L, "a"), 100, 1L << 20).isEmpty,
+      "the byte bound let 12 MiB through")
+    assert(bridge.collectBounded(wide(1L, "a"), 23, 64L << 20).isEmpty,
+      "the row bound let 24 rows through")
+
+    def run(lanes: GraftTable.CowLanes) = {
+      val t = new GraftTable(tmp(), Seq("id"), nBuckets = 4)
+      mergeWith(t, wide(1L, "a"), lanes)
+      mergeWith(t, wide(2L, "b").filter(col("id") % 2 === 0), lanes)
+      (t.read(spark).select(col("id"), md5(col("v")))
+        .as[(Long, String)].collect().toSet, t.readMeta().highWater)
+    }
+    val local = run(GraftTable.CowLanes())
+    assert(local._1.size == 24 && local._2 == seq(2L))
+    assert(run(GraftTable.CowLanes(localMaxBytes = 1L << 20)) == local)
+    assert(run(GraftTable.CowLanes(localMaxRows = 0)) == local)
   }
 
   test("staging small/wide decision: no-shuffle only when the input " +
