@@ -18,9 +18,9 @@ package graft.core
   * Position-based instead of name-based: the consumer decodes against
   * the schema version the line's `_schema_lsn` selects, which descends
   * from the same Relation message that ordered the producer's cells.
-  * The leading '=' discriminates from legacy JSON payloads ('{'), so
-  * one log may mix both and [[graft.pipeline.CdcPipeline.jsonDecode]]
-  * dispatches per row. */
+  * Packed is the only data-image format the envelope decode
+  * ([[graft.pipeline.CdcPipeline.jsonDecode]]) reads: a payload without
+  * the leading '=' (a JSON image, say) fails [[parse]]. */
 object PackedRow {
   val Marker = '='
   /** ASCII unit separator — never produced raw by the escape set. */
@@ -56,7 +56,8 @@ object PackedRow {
   /** Inverse of [[render]]; expects the payload WITH its leading '='. */
   def parse(s: String): IndexedSeq[Option[String]] = {
     require(s.nonEmpty && s.charAt(0) == Marker,
-      s"not a packed payload: '${s.take(20)}'")
+      s"not a packed payload (JSON change images are no longer " +
+        s"decoded): '${s.take(20)}'")
     val out = Vector.newBuilder[Option[String]]
     val cur = new StringBuilder
     var isNull = false

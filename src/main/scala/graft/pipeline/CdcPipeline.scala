@@ -471,14 +471,9 @@ final class CdcPipeline(
             // on different merge keys, so both survive LWW dedup.
             val idCols = schema.identityColumns
             val expanded = if (idCols.isEmpty) dataSlice else {
-              val ks = org.apache.spark.sql.types.StructType(
-                schema.sparkSchema.fields.filter(f => idCols.contains(f.name)))
-              // dual-format key images, like jsonDecode: the hot path
-              // carries '='-packed payloads (from_json alone returned
-              // null there, so packed key-changing updates were never
-              // expanded); keys compare as canonical TEXT cells — both
-              // sides of one row share a producer format, so within-row
-              // equality is exact
+              // keys compare as the packed images' canonical TEXT cells
+              // (one producer renders both sides of a row, so within-row
+              // equality is exact); a JSON image fails the parse
               val specs = schema.replicatedColumns
               val keyIdx = specs.zipWithIndex.collect {
                 case (s, i) if idCols.contains(s.name) => i }
@@ -495,18 +490,12 @@ final class CdcPipeline(
                   ArrayType(StringType, containsNull = true), "parse",
                   Seq(GraftColumnBridge.expression(payload)),
                   inputTypes = Seq(StringType)))
-                val js = from_json(payload, ks)
-                val packedK = struct(keyIdx.zipWithIndex.map { case (ci, o) =>
-                  try_element_at(cells, lit(ci + 1)).as(s"_k$o") }: _*)
-                val jsonK = struct(ks.fields.zipWithIndex.map { case (f, o) =>
-                  js.getField(f.name).cast("string").as(s"_k$o") }: _*)
                 // struct(...) is never null, so the null payload guard
                 // must come first or U-rows without a before image would
                 // wrongly read as key changes
                 when(payload.isNull, lit(null).cast(strKs))
-                  .when(payload.startsWith(
-                    graft.core.PackedRow.Marker.toString), packedK)
-                  .otherwise(jsonK)
+                  .otherwise(struct(keyIdx.zipWithIndex.map { case (ci, o) =>
+                    try_element_at(cells, lit(ci + 1)).as(s"_k$o") }: _*))
               }
               val withK = dataSlice
                 .withColumn("_bk", keyRep(col("before")))
@@ -684,13 +673,12 @@ object CdcPipeline {
   /** Standard envelope decode: before/after images → flat typed payload
     * + (_op, _commit_lsn, _tx_ordinal), against the schema version in
     * force. The single shared implementation for the replicator binary,
-    * queries, and tests. Dispatches per row on the payload format:
-    *
-    *   - `=`-prefixed PACKED payloads ([[graft.core.PackedRow]], the hot
-    *     path the live decoder emits): one codegen'd `StaticInvoke` cell
-    *     split + positional Postgres-text casts — no JSON library in the
-    *     apply path;
-    *   - `{`-prefixed legacy JSON images: `from_json` as before.
+    * queries, and tests. Images are `=`-prefixed PACKED payloads
+    * ([[graft.core.PackedRow]]), the only data-image format: one
+    * codegen'd `StaticInvoke` cell split + positional Postgres-text
+    * casts, no JSON library in the apply path. Any other payload (a
+    * `{`-prefixed JSON image included) fails the query that evaluates
+    * it, and the pipeline quarantines that table.
     *
     * Positional contract: packed cells follow `schema.replicatedColumns`
     * order, which descends from the same Relation message that ordered
@@ -699,26 +687,19 @@ object CdcPipeline {
     import org.apache.spark.sql.GraftColumnBridge
     import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
     import org.apache.spark.sql.types.{ArrayType, StringType}
-    val st = schema.sparkSchema
     val specs = schema.replicatedColumns
     val payload = coalesce(col("after"), col("before"))
-    val isPacked = payload.startsWith(graft.core.PackedRow.Marker.toString)
     val cells = GraftColumnBridge.column(StaticInvoke(
       graft.functions.PgPackedRowCodec.getClass,
       ArrayType(StringType, containsNull = true),
       "parse",
       Seq(GraftColumnBridge.expression(payload)),
       inputTypes = Seq(StringType)))
-    val jsonP = from_json(payload, st)
     val fields = specs.zipWithIndex.map { case (spec, i) =>
       // try_element_at: a key-only image (REPLICA IDENTITY DEFAULT
-      // deletes) packs fewer cells than the schema — absent → null,
-      // matching from_json on a key-only JSON object
-      when(isPacked,
-        graft.sources.PgCopy.decodeColumn(
-          try_element_at(cells, lit(i + 1)), spec))
-        .otherwise(jsonP.getField(spec.name))
-        .as(spec.name)
+      // deletes) packs fewer cells than the schema — absent → null
+      graft.sources.PgCopy.decodeColumn(
+        try_element_at(cells, lit(i + 1)), spec).as(spec.name)
     }
     val meta = Seq(col("_op"), col("_commit_lsn"), col("_tx_ordinal")) ++
       (if (df.columns.contains("_missing")) Seq(col("_missing")) else Nil)

@@ -1302,30 +1302,17 @@ final class GraftTable(val root: String, val keyCols: Seq[String],
       hw: String, nB: Int, fresh: DataFrame, newHigh0: String,
       buckets: Seq[Int], coalesceCols: Seq[String], advanceHw: Boolean,
       batchBytes: Option[Long], oneTaskBelowBytes: Long): Unit = {
-    def bumped(old: String) =
-      if (advanceHw) { if (old.isEmpty || newHigh0 > old) newHigh0 else old }
-      else old
-
-    // bootstrap when the affected buckets hold no prior STATE (new
-    // table, post-truncate, or keys landing in never-written buckets):
-    // no survivors to join against — write the upserts directly. Layer
-    // upsert files count (they'd be shadowed otherwise) and so do layer
-    // DELETE files: a bucket holding only a delete-key layer file has
-    // state too — bootstrapping past it would publish a base file the
-    // stale delete layer then anti-joins back out (a delete of key K
-    // followed by a re-insert of K would silently vanish).
+    // bootstrap when the affected buckets hold no prior state: no
+    // survivors to join against — write the upserts directly
     @annotation.tailrec
     def attempt(current: Option[Manifest]): Unit = {
-      val existingBucketFiles = current.toSeq
-        .flatMap(m => buckets.flatMap(b => m.files.getOrElse(b, Nil) ++
-          m.layers.flatMap(l =>
-            l.ups.getOrElse(b, Nil) ++ l.del.getOrElse(b, Nil))))
-      if (existingBucketFiles.isEmpty) {
+      if (!holdsState(current, buckets)) {
         val upserts = fresh.filter(col("_op") =!= "D").drop("_op", "_seq")
         val files = writeDataFiles(upserts,
           math.min(nB, math.max(1, buckets.size)))
         val carried = current.map(_.files -- buckets).getOrElse(Map.empty)
-        publish(Manifest(nextVersion, bumped(hw), carried ++ files,
+        publish(Manifest(nextVersion, advancedHw(hw, newHigh0, advanceHw),
+          carried ++ files,
           nextSchemaDdl(current, carried, upserts.schema),
           layers = current.map(_.layers).getOrElse(Nil)))
       } else if (current.exists(_.layers.nonEmpty)) {
@@ -1338,7 +1325,8 @@ final class GraftTable(val root: String, val keyCols: Seq[String],
       } else {
         val m = current.get
         rewriteBuckets(spark, m, fresh.drop("_seq"), buckets, nB,
-          coalesceCols, bumped(m.highWater), batchBytes, oneTaskBelowBytes)
+          coalesceCols, advancedHw(m.highWater, newHigh0, advanceHw),
+          batchBytes, oneTaskBelowBytes)
       }
     }
     attempt(current0)
@@ -1523,9 +1511,6 @@ final class GraftTable(val root: String, val keyCols: Seq[String],
           "carry its replay sequence key")
       val batchRows = metrics("n").asInstanceOf[Long]
       val delRows = metrics("nDel").asInstanceOf[Long]
-      def bumped(old: String) =
-        if (advanceHw) { if (old.isEmpty || newHigh0 > old) newHigh0 else old }
-        else old
       // adopt staged files as table files: an atomic move per file —
       // no rewrite, no job (the staged content IS the final content:
       // physical names, key-sorted, _bucket/_op live in the dir names)
@@ -1541,25 +1526,16 @@ final class GraftTable(val root: String, val keyCols: Seq[String],
           }
         }.toMap
 
-      // bootstrap when the affected buckets hold no prior STATE (new
-      // table, post-truncate, or keys landing in never-written buckets):
-      // no survivors to join against — adopt the staged upserts as base
-      // files. Layer upsert files count (they'd be shadowed otherwise)
-      // and so do layer DELETE files: a bucket holding only a delete-key
-      // layer file has state too — bootstrapping past it would publish a
-      // base file the stale delete layer then anti-joins back out (a
-      // delete of key K followed by a re-insert of K would silently
-      // vanish). Re-evaluated after a layer collapse (`attempt` below
+      // bootstrap when the affected buckets hold no prior state: no
+      // survivors to join against — adopt the staged upserts as base
+      // files. Re-evaluated after a layer collapse (`attempt` below
       // mirrors the old recursive re-merge without re-staging).
       def attempt(current: Option[Manifest]): Unit = {
-        val existingBucketFiles = current.toSeq
-          .flatMap(m => buckets.flatMap(b => m.files.getOrElse(b, Nil) ++
-            m.layers.flatMap(l =>
-              l.ups.getOrElse(b, Nil) ++ l.del.getOrElse(b, Nil))))
-        if (existingBucketFiles.isEmpty) {
+        if (!holdsState(current, buckets)) {
           val files = adopt(stagedUps)
           val carried = current.map(_.files -- buckets).getOrElse(Map.empty)
-          publish(Manifest(nextVersion, bumped(hw), carried ++ files,
+          publish(Manifest(nextVersion, advancedHw(hw, newHigh0, advanceHw),
+            carried ++ files,
             nextSchemaDdl(current, carried, logicalSchema),
             layers = current.map(_.layers).getOrElse(Nil)))
         } else if (batchRows <= GraftTable.MorDeltaMaxRows &&
@@ -1570,7 +1546,8 @@ final class GraftTable(val root: String, val keyCols: Seq[String],
           // write cost O(delta), commit cost ZERO jobs. Readers fold
           // the layer ([[applyLayers]]; delete files read key-pruned).
           val m = current.get
-          publish(Manifest(nextVersion, bumped(m.highWater), m.files,
+          publish(Manifest(nextVersion,
+            advancedHw(m.highWater, newHigh0, advanceHw), m.files,
             nextSchemaDdl(current, m.files, logicalSchema),
             layers = m.layers :+
               DeltaLayer(nextVersion, adopt(stagedUps), adopt(stagedDels))))
@@ -1594,13 +1571,34 @@ final class GraftTable(val root: String, val keyCols: Seq[String],
           rewriteBuckets(spark, m,
             if (fromPhysical.isEmpty) stageDf
             else stageDf.withColumnsRenamed(fromPhysical),
-            buckets, nB, Nil, bumped(m.highWater), Some(stagedBytes),
+            buckets, nB, Nil, advancedHw(m.highWater, newHigh0, advanceHw),
+            Some(stagedBytes),
             oneTaskBelowBytes)
         }
       }
       attempt(current)
     } finally deleteRecursively(Paths.get(stage))
   }
+
+  /** Whether `buckets` hold prior STATE in `current` (false for a new
+    * table, after a truncate, or for keys landing in never-written
+    * buckets). Layer upsert files count (they'd be shadowed otherwise)
+    * and so do layer DELETE files: a bucket holding only a delete-key
+    * layer file has state too — bootstrapping past it would publish a
+    * base file the stale delete layer then anti-joins back out (a
+    * delete of key K followed by a re-insert of K would silently
+    * vanish). */
+  private def holdsState(current: Option[Manifest],
+      buckets: Seq[Int]): Boolean =
+    current.exists(m => buckets.exists(b =>
+      m.files.getOrElse(b, Nil).nonEmpty || m.layers.exists(l =>
+        l.ups.getOrElse(b, Nil).nonEmpty || l.del.getOrElse(b, Nil).nonEmpty)))
+
+  /** The high-water mark after a batch whose largest `_seq` is `newHigh`:
+    * the larger of `old` and `newHigh` when `advance`, else `old`. */
+  private def advancedHw(old: String, newHigh: String,
+      advance: Boolean): String =
+    if (advance && (old.isEmpty || newHigh > old)) newHigh else old
 
   /** Bytes a copy-on-write rewrite of `buckets` would have to re-write:
     * their base files plus any layer upserts (a CoW merge on a layered

@@ -22,8 +22,9 @@ import scala.jdk.CollectionConverters._
   *     store/state/base.rs:76-99 — here Spark's checkpointed Offset
   *
   * The "WAL" is a change-log file of envelope lines (tab-separated:
-  * lsn, tx_ordinal, op, table, schema_lsn, before, after — the payloads are
-  * JSON, decoded downstream against the schema version in force, as the
+  * lsn, tx_ordinal, op, table, schema_lsn, before, after — row images are
+  * packed cells ([[graft.core.PackedRow]]; Relation records carry JSON),
+  * decoded downstream against the schema version in force, as the
   * reference decodes tuple bytes against `ReplicatedTableSchema`). A
   * production Postgres reader would implement this same MicroBatchStream
   * against the replication socket; everything downstream (offsets,

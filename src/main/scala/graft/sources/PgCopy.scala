@@ -425,8 +425,9 @@ object PgCopy {
 
   /** One COPY/packed TEXT cell → its declared Spark type with Postgres
     * text semantics (see [[decodeTyped]]); shared by the wire backfill
-    * and the packed-envelope decode
-    * ([[graft.pipeline.CdcPipeline.jsonDecode]]). */
+    * and the change-envelope decode
+    * ([[graft.pipeline.CdcPipeline.jsonDecode]]), whose images are all
+    * packed cells. */
   def decodeColumn(c: org.apache.spark.sql.Column,
       spec: graft.core.ColumnSpec): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.Column

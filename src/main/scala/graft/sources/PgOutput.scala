@@ -384,56 +384,10 @@ object PgOutput {
     graft.core.TableSchemaV(r.relId.toLong, r.relName, schemaLsn, cols)
   }
 
-  /** OIDs whose Postgres text form is a bare JSON number (so `from_json`
-    * decodes them natively into their Spark numeric types). */
-  private val numericOids = Set(20, 21, 23, 26, 700, 701, 1700)
-  private val plainNumber = "-?\\d+(\\.\\d+)?([eE][+-]?\\d+)?".r
-
-  /** JSON object for a tuple against its Relation, plus the names of
-    * TOAST-unchanged columns (the `_missing` mask). Values typed numeric
-    * by their OID render bare when their text form is a plain number
-    * (Postgres special forms like NaN/Infinity stay quoted); bool renders
-    * true/false; text values are JSON-escaped; binary values hex-encoded
-    * like bytea. */
-  private def tupleJson(r: Relation, t: TupleData): (String, Seq[String]) = {
-    requireArity(r, t)
-    val missing = Seq.newBuilder[String]
-    def quoted(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t") + "\""
-    val fields = r.columns.zip(t).flatMap { case (c, v) =>
-      v match {
-        case TNull => Some(s""""${c.name}":null""")
-        case TUnchangedToast => missing += c.name; None
-        case TText(s) =>
-          val rendered =
-            if (c.typeOid == 16) (if (s == "t") "true" else "false")
-            else if (numericOids.contains(c.typeOid) &&
-              plainNumber.matches(s)) s
-            else quoted(s)
-          Some(s""""${c.name}":$rendered""")
-        case TBinary(bs) =>
-          // binary-format values (the stream's optional `binary` mode):
-          // convert to the type's TEXT form (graft.core.PgBinary), then
-          // render exactly like a text-mode cell — one canonical JSON
-          // shape regardless of the negotiated tuple format
-          val s = graft.core.PgBinary.text(c.typeOid, bs.toArray)
-          val rendered =
-            if (c.typeOid == 16) (if (s == "t") "true" else "false")
-            else if (numericOids.contains(c.typeOid) &&
-              plainNumber.matches(s)) s
-            else quoted(s)
-          Some(s""""${c.name}":$rendered""")
-      }
-    }
-    (fields.mkString("{", ",", "}"), missing.result())
-  }
-
   /** Postgres TEXT form of one tuple value (None = NULL); binary-mode
     * values convert through [[graft.core.PgBinary]] — fixed-width
     * numerics, text-ish types, temporals, uuid and numeric all render
-    * as their text forms; unsupported types fall back to bytea hex.
-    * Shared by [[tuplePacked]]. */
+    * as their text forms; unsupported types fall back to bytea hex. */
   private def valueText(typeOid: Int, v: TupleValue): Option[String] =
     v match {
       case TNull | TUnchangedToast => None
@@ -441,12 +395,11 @@ object PgOutput {
       case TBinary(bs) => Some(graft.core.PgBinary.text(typeOid, bs.toArray))
     }
 
-  /** PACKED payload for a tuple ([[graft.core.PackedRow]]): raw text
-    * values straight from pgoutput into position-ordered cells — no JSON
-    * rendering on the intake side and no JSON parsing on the apply side
-    * (the binary-envelope ROADMAP item). TOAST-unchanged columns pack as
-    * NULL and report through the `_missing` mask exactly like the JSON
-    * render (from_json yields null for absent keys — same semantics). */
+  /** PACKED payload for a tuple ([[graft.core.PackedRow]]), the only
+    * data-image format: raw text values straight from pgoutput into
+    * position-ordered cells — no JSON rendering on the intake side and
+    * no JSON parsing on the apply side. TOAST-unchanged columns pack as
+    * NULL and report through the `_missing` mask. */
   private def tuplePacked(r: Relation, t: TupleData): (String, Seq[String]) = {
     requireArity(r, t)
     val missing = Seq.newBuilder[String]
@@ -613,10 +566,6 @@ object PgOutput {
     * (commit_lsn, tx_ordinal) because Postgres streams commits in commit
     * order. */
   final class DecodeSession(
-      /** Emit PACKED payloads ([[graft.core.PackedRow]]) instead of JSON
-        * images — the default hot path; false pins the legacy JSON
-        * format (mixed logs decode fine either way). */
-      packedPayloads: Boolean = true,
       /** Skip DATA messages of transactions that carry a replication
         * Origin message — the bidirectional-replication loop breaker
         * (Postgres `CREATE SUBSCRIPTION … (origin = none)` semantics,
@@ -1121,35 +1070,32 @@ object PgOutput {
           case _ => 0L
         }
         val o = ordinal; ordinal += 1
-        toEnvelopeLine(data, relations, lsn, o, schemaLsn,
-          packed = packedPayloads)
+        toEnvelopeLine(data, relations, lsn, o, schemaLsn)
           .toSeq.flatMap(_.split("\n"))
     }
   }
 
   /** One decoded data message → a change-log envelope line (the
     * CdcLogSource format), threading commit metadata from the enclosing
-    * Begin. Returns None for control messages the envelope does not carry
+    * Begin. Row images are packed payloads ([[tuplePacked]]). Returns
+    * None for control messages the envelope does not carry
     * (Begin/Commit/Origin/Type — their content lives in the sequence key).
     */
   def toEnvelopeLine(msg: Message, rel: Int => Relation, commitLsn: Long,
-      txOrdinal: Long, schemaLsn: Long,
-      packed: Boolean = false): Option[String] = {
-    def image(r: Relation, t: TupleData): (String, Seq[String]) =
-      if (packed) tuplePacked(r, t) else tupleJson(r, t)
+      txOrdinal: Long, schemaLsn: Long): Option[String] = {
     msg match {
     case Insert(id, t) =>
-      val (after, missing) = image(rel(id), t)
+      val (after, missing) = tuplePacked(rel(id), t)
       Some(CdcLogSource.renderLine("I", id.toLong, commitLsn, commitLsn,
         txOrdinal, schemaLsn, None, Some(after), missing))
     case Update(id, _, old, t) =>
       val r = rel(id)
-      val (after, missing) = image(r, t)
-      val before = old.map(o => image(r, o)._1)
+      val (after, missing) = tuplePacked(r, t)
+      val before = old.map(o => tuplePacked(r, o)._1)
       Some(CdcLogSource.renderLine("U", id.toLong, commitLsn, commitLsn,
         txOrdinal, schemaLsn, before, Some(after), missing))
     case Delete(id, _, t) =>
-      val (before, _) = image(rel(id), t)
+      val (before, _) = tuplePacked(rel(id), t)
       Some(CdcLogSource.renderLine("D", id.toLong, commitLsn, commitLsn,
         txOrdinal, schemaLsn, Some(before), None))
     case Truncate(_, ids) =>

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.PackedImage.img
 import graft.SparkSpec
 import graft.core.{ColumnSpec, SchemaRegistry, TableSchemaV}
 import graft.sinks.{CdcSink, CurrentStateSink, GraftTable}
@@ -39,15 +40,15 @@ class InterpretedApplySpec extends SparkSpec {
 
   private def user(op: String, lsn: Long, ord: Long, id: Long, name: String,
       age: Int) = CdcLogSource.renderLine(op, 1L, lsn, lsn, ord, 0L,
-    if (op == "I") None else Some(s"""{"id":$id}"""),
-    Some(s"""{"id":$id,"name":"$name","age":$age}"""))
+    if (op == "I") None else Some(img(id)),
+    Some(img(id, name, age)))
   private def branch(op: String, lsn: Long, ord: Long, bid: Long,
       balance: Long) = CdcLogSource.renderLine(op, 2L, lsn, lsn, ord, 0L,
-    if (op == "I") None else Some(s"""{"bid":$bid}"""),
-    Some(s"""{"bid":$bid,"balance":$balance,"note":"b$bid"}"""))
+    if (op == "I") None else Some(img(bid)),
+    Some(img(bid, balance, s"b$bid")))
   private def delUser(lsn: Long, ord: Long, id: Long) =
     CdcLogSource.renderLine("D", 1L, lsn, lsn, ord, 0L,
-      Some(s"""{"id":$id}"""), None)
+      Some(img(id)), None)
 
   private def keysOf(t: String) = if (t == "branches") Seq("bid") else Seq("id")
 
@@ -132,11 +133,11 @@ class InterpretedApplySpec extends SparkSpec {
       Seq(
         // key-changing update: id 3 → 500
         CdcLogSource.renderLine("U", 1L, 200L, 200L, 0L, 0L,
-          Some("""{"id":3}"""),
-          Some("""{"id":500,"name":"moved","age":3}""")),
+          Some(img(3)),
+          Some(img(500, "moved", 3))),
         // TOAST-masked update: name unchanged (absent, listed missing)
         CdcLogSource.renderLine("U", 1L, 201L, 201L, 0L, 0L,
-          Some("""{"id":4}"""), Some("""{"id":4,"age":99}"""),
+          Some(img(4)), Some(img(4, None, 99)),
           missing = Seq("name")),
         delUser(202L, 0, 5L),
         user("U", 203L, 0, 6L, "six", 66),

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.PackedImage.img
 import graft.SparkSpec
 import graft.core.{ColumnSpec, SchemaRegistry, TableSchemaV}
 import graft.sinks.{CurrentStateSink, GraftTable, MaintenancePolicy}
@@ -414,11 +415,11 @@ class MaintenanceLeaseSpec extends SparkSpec {
 
   private def ins(lsn: Long, ord: Long, id: Long, name: String, age: Int) =
     CdcLogSource.renderLine("I", 1L, lsn, lsn, ord, 0L, None,
-      Some(s"""{"id":$id,"name":"$name","age":$age}"""))
+      Some(img(id, name, age)))
   private def upd(lsn: Long, ord: Long, id: Long, name: String, age: Int) =
     CdcLogSource.renderLine("U", 1L, lsn, lsn, ord, 0L,
-      Some(s"""{"id":$id}"""),
-      Some(s"""{"id":$id,"name":"$name","age":$age}"""))
+      Some(img(id)),
+      Some(img(id, name, age)))
 
   test("external compact/vacuum loop runs concurrently with a live " +
       "stream under the lease: zero failed commits, converged state") {

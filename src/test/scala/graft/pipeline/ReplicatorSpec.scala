@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.PackedImage.img
 import graft.SparkSpec
 import graft.core.{ColumnSpec, SchemaRegistry, TableSchemaV}
 import graft.sources.CdcLogSource
@@ -48,11 +49,11 @@ class ReplicatorSpec extends SparkSpec {
     // change log: update 1, delete 2, insert 3
     Files.write(Paths.get(s"$work/wal.log"), Seq(
       CdcLogSource.renderLine("U", 1L, 1L, 1L, 0L, 0L,
-        Some("""{"id":1}"""), Some("""{"id":1,"name":"a2"}""")),
+        Some(img(1)), Some(img(1, "a2"))),
       CdcLogSource.renderLine("D", 1L, 2L, 2L, 0L, 0L,
-        Some("""{"id":2}"""), None),
+        Some(img(2)), None),
       CdcLogSource.renderLine("I", 1L, 3L, 3L, 0L, 0L, None,
-        Some("""{"id":3,"name":"c"}""")))
+        Some(img(3, "c"))))
       .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
     // config file
     val cfg = s"""
@@ -101,9 +102,9 @@ class ReplicatorSpec extends SparkSpec {
       .write.parquet(s"$work/snapshot")
     Files.write(Paths.get(s"$work/wal.log"), Seq(
       CdcLogSource.renderLine("U", 1L, 1L, 1L, 0L, 0L,
-        Some("""{"id":1}"""), Some("""{"id":1,"name":"a2"}""")),
+        Some(img(1)), Some(img(1, "a2"))),
       CdcLogSource.renderLine("I", 1L, 2L, 3L, 0L, 0L, None,
-        Some("""{"id":3,"name":"c"}""")))
+        Some(img(3, "c"))))
       .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
     // MoR destination, admission floor 0 (always layer), maintenance
     // timer ON but collapse triggers OFF — the layers must survive
@@ -143,11 +144,11 @@ class ReplicatorSpec extends SparkSpec {
       .write.parquet(s"$work/snapshot")
     Files.write(Paths.get(s"$work/wal.log"), Seq(
       CdcLogSource.renderLine("U", 1L, 1L, 1L, 0L, 0L,
-        Some("""{"id":1}"""), Some("""{"id":1,"name":"a2"}""")),
+        Some(img(1)), Some(img(1, "a2"))),
       CdcLogSource.renderLine("D", 1L, 2L, 2L, 0L, 0L,
-        Some("""{"id":2}"""), None),
+        Some(img(2)), None),
       CdcLogSource.renderLine("I", 1L, 3L, 3L, 0L, 0L, None,
-        Some("""{"id":3,"name":"c"}""")))
+        Some(img(3, "c"))))
       .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
     val url = s"jdbc:derby:$work/engine;create=true"
     val cfg = s"""
@@ -531,9 +532,9 @@ class ReplicatorSpec extends SparkSpec {
       .write.parquet(s"$work/snapshot0")
     Files.write(Paths.get(s"$replica/wal.log"), Seq(
       CdcLogSource.renderLine("I", 1L, 1L, 1L, 0L, 0L, None,
-        Some("""{"id":1,"name":"a"}""")),
+        Some(img(1, "a"))),
       CdcLogSource.renderLine("I", 1L, 2L, 2L, 0L, 0L, None,
-        Some("""{"id":2,"name":"b"}""")))
+        Some(img(2, "b"))))
       .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
     def cfg(): String = {
       val c = s"""
@@ -564,7 +565,7 @@ class ReplicatorSpec extends SparkSpec {
     // applies (no duplicate inserts of ids 1/2)
     Files.write(Paths.get(s"$replica/wal.log"), Seq(
       CdcLogSource.renderLine("U", 1L, 3L, 3L, 0L, 0L,
-        Some("""{"id":1}"""), Some("""{"id":1,"name":"a2"}""")))
+        Some(img(1)), Some(img(1, "a2"))))
       .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8),
       java.nio.file.StandardOpenOption.APPEND)
     graft.Replicator.main(Array(cfg()))

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.PackedImage.img
 import graft.SparkSpec
 import graft.core.{ColumnSpec, SchemaRegistry, TableSchemaV}
 import graft.sinks.{CurrentStateSink, ExactlyOnceSink, MemorySink, TxnLedger}
@@ -35,14 +36,14 @@ class StreamingSpec extends SparkSpec {
 
   private def ins(lsn: Long, ord: Long, id: Long, name: String, age: Int) =
     CdcLogSource.renderLine("I", 1L, lsn, lsn, ord, 0L, None,
-      Some(s"""{"id":$id,"name":"$name","age":$age}"""))
+      Some(img(id, name, age)))
   private def upd(lsn: Long, ord: Long, id: Long, name: String, age: Int) =
     CdcLogSource.renderLine("U", 1L, lsn, lsn, ord, 0L,
-      Some(s"""{"id":$id}"""),
-      Some(s"""{"id":$id,"name":"$name","age":$age}"""))
+      Some(img(id)),
+      Some(img(id, name, age)))
   private def del(lsn: Long, ord: Long, id: Long) =
     CdcLogSource.renderLine("D", 1L, lsn, lsn, ord, 0L,
-      Some(s"""{"id":$id}"""), None)
+      Some(img(id)), None)
 
   private def mkPipeline(dir: String, sink: CurrentStateSink) = {
     val registry = new SchemaRegistry
@@ -91,10 +92,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("packed envelopes: PK-changing update expands to DELETE(old)+UPSERT(new)") {
-    // the hot path carries '='-packed payloads; the J1 expansion must
-    // detect the key change there too (a from_json-only parse read
-    // packed keys as null and never expanded — the old key's row
-    // survived forever)
+    // the J1 expansion compares the packed key cells of the before and
+    // after images (a JSON-only key parse once read packed keys as null
+    // and never expanded — the old key's row survived forever)
     val dir = tmp("cdc-pk-packed")
     val log = s"$dir/wal.log"
     def packed(id: Long, name: String, age: Int) =
@@ -378,6 +378,49 @@ class StreamingSpec extends SparkSpec {
     assert(pipeline.stateStore.lastFlushLsn == 9L)
   }
 
+  /** Streams `lines` into a backfilled users table and returns the
+    * table's state and rows afterwards. */
+  private def streamOnce(prefix: String, lines: Seq[String]) = {
+    val dir = tmp(prefix)
+    val log = s"$dir/wal.log"
+    val sink = new CurrentStateSink(s"$dir/tables", _ => Seq("id"), 4)
+    val pipeline = mkPipeline(dir, sink)
+    pipeline.backfill(Seq(usersSchema), _ => (
+      Seq((1L, "a", 30)).toDF("id", "name", "age"), 0L))
+    appendLog(log, lines)
+    val q = pipeline.startStream(log)
+    q.processAllAvailable()
+    q.stop()
+    (pipeline.stateStore.get(1L),
+      sink.read(spark, "users").select("id", "name", "age")
+        .as[(Long, String, Int)].collect().toSet)
+  }
+
+  private def assertRejectsJson(state: TableState): Unit = state match {
+    case TableState.Errored(reason, _) =>
+      assert(reason.contains("not a packed payload") &&
+        reason.contains("JSON change images are no longer decoded") &&
+        reason.contains("{\"id\":"), reason)
+    case other => fail(s"a JSON image must fail the apply, table is $other")
+  }
+
+  test("a JSON after image fails the apply, naming the payload") {
+    val (state, rows) = streamOnce("cdc-json-after", Seq(
+      CdcLogSource.renderLine("I", 1L, 1L, 1L, 0L, 0L, None,
+        Some("""{"id":2,"name":"b","age":40}"""))))
+    assertRejectsJson(state)
+    assert(rows == Set((1L, "a", 30)), rows)
+  }
+
+  test("a JSON before image of a key-changing update fails the apply, " +
+      "naming the payload") {
+    val (state, rows) = streamOnce("cdc-json-before", Seq(
+      CdcLogSource.renderLine("U", 1L, 1L, 1L, 0L, 0L,
+        Some("""{"id":1}"""), Some(img(2, "a", 31)))))
+    assertRejectsJson(state)
+    assert(rows == Set((1L, "a", 30)), rows)
+  }
+
   test("TOAST partial update in-stream: _missing mask preserves stored columns (ST6)") {
     val dir = tmp("cdc-toast")
     val log = s"$dir/wal.log"
@@ -390,11 +433,11 @@ class StreamingSpec extends SparkSpec {
     appendLog(log, Seq(
       // name column TOAST-unchanged: absent from after, listed in _missing
       CdcLogSource.renderLine("U", 1L, 1L, 1L, 0L, 0L,
-        Some("""{"id":1}"""), Some("""{"id":1,"age":99}"""),
+        Some(img(1)), Some(img(1, None, 99)),
         missing = Seq("name")),
       // ordinary full update on id=2 sets name to a REAL null
       CdcLogSource.renderLine("U", 1L, 2L, 2L, 0L, 0L,
-        Some("""{"id":2}"""), Some("""{"id":2,"name":null,"age":32}"""))))
+        Some(img(2)), Some(img(2, None, 32)))))
     val q = pipeline.startStream(log)
     q.processAllAvailable()
     q.stop()
@@ -425,12 +468,12 @@ class StreamingSpec extends SparkSpec {
       """{"name":"age","type":"int4","ord":3}]}"""
     appendLog(log, Seq(
       CdcLogSource.renderLine("U", 1L, 2L, 2L, 0L, 0L,
-        Some("""{"id":1}"""), Some("""{"id":1,"age":55}"""),
+        Some(img(1)), Some(img(1, None, 55)),
         missing = Seq("name")),
       CdcLogSource.renderLine("R", 1L, 3L, 3L, 0L, 3L, None,
         Some(renameJson)),
       CdcLogSource.renderLine("U", 1L, 4L, 4L, 0L, 3L,
-        Some("""{"id":1}"""), Some("""{"id":1,"age":77}"""),
+        Some(img(1)), Some(img(1, None, 77)),
         missing = Seq("full_name"))))
     val q = pipeline.startStream(log)
     q.processAllAvailable()
@@ -463,7 +506,7 @@ class StreamingSpec extends SparkSpec {
         Some(relationJson)),
       // post-DDL rows decode against the v2 schema (carry email)
       CdcLogSource.renderLine("I", 1L, 3L, 3L, 0L, 2L, None,
-        Some("""{"id":3,"name":"c","age":50,"email":"c@x"}"""))))
+        Some(img(3, "c", 50, "c@x")))))
     val q = pipeline.startStream(log)
     q.processAllAvailable()
     q.stop()
@@ -517,10 +560,10 @@ class StreamingSpec extends SparkSpec {
     // SAME logical column (no fork), including a fresh insert
     appendLog(log, Seq(
       CdcLogSource.renderLine("U", 1L, 3L, 3L, 0L, 2L,
-        Some("""{"id":1}"""),
-        Some("""{"id":1,"full_name":"ada"}""")),
+        Some(img(1)),
+        Some(img(1, "ada"))),
       CdcLogSource.renderLine("I", 1L, 4L, 4L, 0L, 2L, None,
-        Some("""{"id":3,"full_name":"c"}"""))))
+        Some(img(3, "c")))))
     q.processAllAvailable()
     q.stop()
 
@@ -564,8 +607,8 @@ class StreamingSpec extends SparkSpec {
       CdcLogSource.renderLine("R", 1L, 3L, 3L, 0L, 3L, None,
         Some(redundantRelation)),
       CdcLogSource.renderLine("U", 1L, 4L, 4L, 0L, 3L,
-        Some("""{"id":1}"""),
-        Some("""{"id":1,"full_name":"ada"}"""))))
+        Some(img(1)),
+        Some(img(1, "ada")))))
     val q = pipeline.startStream(log)
     q.processAllAvailable()
     q.stop()
@@ -609,10 +652,10 @@ class StreamingSpec extends SparkSpec {
       CdcLogSource.renderLine("R", 1L, 3L, 3L, 0L, 3L, None,
         Some(renamedJson)),
       CdcLogSource.renderLine("U", 1L, 4L, 4L, 0L, 3L,
-        Some("""{"user_id":1}"""),
-        Some("""{"user_id":1,"name":"ada","age":99}""")),
+        Some(img(1)),
+        Some(img(1, "ada", 99))),
       CdcLogSource.renderLine("I", 1L, 5L, 5L, 0L, 3L, None,
-        Some("""{"user_id":3,"name":"c","age":5}"""))))
+        Some(img(3, "c", 5)))))
     val q = pipeline.startStream(log)
     q.processAllAvailable()
     q.stop()
@@ -653,7 +696,7 @@ class StreamingSpec extends SparkSpec {
       CdcLogSource.renderLine("R", 1L, 2L, 2L, 0L, 2L, None,
         Some(badJson)),
       CdcLogSource.renderLine("I", 1L, 3L, 3L, 0L, 2L, None,
-        Some("""{"name":"zed","age":9}"""))))
+        Some(img("zed", 9)))))
     val q = pipeline.startStream(log)
     q.processAllAvailable()
     q.stop()
@@ -705,8 +748,8 @@ class StreamingSpec extends SparkSpec {
     appendLog(log, Seq(
       // replica-identity (id) changes: 1 → 5
       CdcLogSource.renderLine("U", 1L, 1L, 1L, 0L, 0L,
-        Some("""{"id":1}"""),
-        Some("""{"id":5,"name":"a-moved","age":30}""")),
+        Some(img(1)),
+        Some(img(5, "a-moved", 30))),
       // ordinary update, key unchanged
       upd(2L, 0, 2L, "b2", 31)))
     val q = pipeline.startStream(log)
@@ -760,9 +803,9 @@ class StreamingSpec extends SparkSpec {
       Seq((1L, "a", 30)).toDF("id", "name", "age"), 0L))
 
     val truncBatch = envelope(
-      ("I", 1L, 0L, None, Some("""{"id":3,"name":"c","age":32}""")),
+      ("I", 1L, 0L, None, Some(img(3, "c", 32))),
       ("T", 2L, 0L, None, None),
-      ("I", 3L, 0L, None, Some("""{"id":4,"name":"d","age":33}""")))
+      ("I", 3L, 0L, None, Some(img(4, "d", 33))))
     pipeline.applyBatch(truncBatch, 0L)
     def ids = sink.read(spark, "users").select("id").as[Long].collect().toSet
     assert(ids == Set(4L))
@@ -792,7 +835,7 @@ class StreamingSpec extends SparkSpec {
     def applied = mem.eventBatches.get("users").map(_.size).getOrElse(0)
 
     val b0 = envelope(("I", 1L, 0L, None,
-      Some("""{"id":2,"name":"b","age":31}""")))
+      Some(img(2, "b", 31))))
     pipeline.applyBatch(b0, 0L)
     assert(applied == 1)
     // foreachBatch replay of a COMMITTED batch (restart after checkpoint
@@ -801,7 +844,7 @@ class StreamingSpec extends SparkSpec {
     assert(applied == 1)
     // the next batch passes through
     pipeline.applyBatch(envelope(("I", 2L, 0L, None,
-      Some("""{"id":3,"name":"c","age":32}"""))), 1L)
+      Some(img(3, "c", 32)))), 1L)
     assert(applied == 2)
 
     // process restart: a FRESH decorator over the same ledger file still
@@ -811,7 +854,7 @@ class StreamingSpec extends SparkSpec {
     pipeline2.applyBatch(b0, 1L)
     assert(applied == 2)
     pipeline2.applyBatch(envelope(("I", 3L, 0L, None,
-      Some("""{"id":4,"name":"d","age":33}"""))), 2L)
+      Some(img(4, "d", 33)))), 2L)
     assert(applied == 3)
     // a different appId has its own version sequence
     assert(new TxnLedger(ledger).lastCommitted("app1") == 2L)
@@ -825,8 +868,8 @@ class StreamingSpec extends SparkSpec {
     pipeline.backfill(Seq(usersSchema), _ => (
       Seq((1L, "orig", 30)).toDF("id", "name", "age"), 5L))
     pipeline.applyBatch(envelope(
-      ("U", 6L, 0L, Some("""{"id":1}"""),
-        Some("""{"id":1,"name":"v6","age":30}"""))), 0L)
+      ("U", 6L, 0L, Some(img(1)),
+        Some(img(1, "v6", 30)))), 0L)
     assert(pipeline.stateStore.get(1L) == TableState.Ready)
 
     // operator kicks a re-copy while the stream keeps running: the table
@@ -835,8 +878,8 @@ class StreamingSpec extends SparkSpec {
     // advance past it and it would never be redelivered.
     pipeline.stateStore.force(1L, TableState.DataSync)
     pipeline.applyBatch(envelope(
-      ("U", 10L, 0L, Some("""{"id":1}"""),
-        Some("""{"id":1,"name":"v10-during-copy","age":31}"""))), 1L)
+      ("U", 10L, 0L, Some(img(1)),
+        Some(img(1, "v10-during-copy", 31)))), 1L)
     // not applied (copy owns the table)... but spooled, not lost
     assert(sink.read(spark, "users").filter($"name" === "v10-during-copy")
       .isEmpty)
@@ -849,7 +892,7 @@ class StreamingSpec extends SparkSpec {
       Seq((1L, "copied", 30)).toDF("id", "name", "age"))
     pipeline.stateStore.force(1L, TableState.SyncDone(8L))
     pipeline.applyBatch(envelope(
-      ("I", 12L, 0L, None, Some("""{"id":2,"name":"next","age":40}"""))), 2L)
+      ("I", 12L, 0L, None, Some(img(2, "next", 40)))), 2L)
 
     val rows = sink.read(spark, "users").select("id", "name")
       .as[(Long, String)].collect().toMap
@@ -912,7 +955,7 @@ class StreamingSpec extends SparkSpec {
 
     appendLog(log, Seq(
       ins(1L, 0, 10L, "ok", 20),
-      CdcLogSource.renderLine("I", 2L, 2L, 2L, 0L, 0L, None, Some("""{"id":5}"""))))
+      CdcLogSource.renderLine("I", 2L, 2L, 2L, 0L, 0L, None, Some(img(5)))))
     val q = pipeline.startStream(log)
     q.processAllAvailable()
     q.stop()

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.PackedImage.img
 import graft.SparkSpec
 import graft.core.{ColumnSpec, SchemaRegistry, TableSchemaV}
 import graft.sinks.CurrentStateSink
@@ -97,7 +98,7 @@ class TelemetrySpec extends SparkSpec {
     val log = s"$dir/wal.log"
     val lines = (1L to 30L).map(i =>
       CdcLogSource.renderLine("I", 1L, i, i, 0L, 0L, None,
-        Some(s"""{"id":$i,"name":"u$i","age":20}""")))
+        Some(img(i, s"u$i", 20))))
     Files.write(Paths.get(log),
       (lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)

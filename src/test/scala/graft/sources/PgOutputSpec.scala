@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.PropSpec
+import graft.core.PackedRow
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop}
 import PgOutput._
@@ -133,19 +134,35 @@ class PgOutputSpec extends AnyFunSuite with PropSpec {
     assert(toEnvelopeLine(Begin(1, 2, 3), rel, 0, 0, 0).isEmpty)
 
     // the file source parses the rendered lines back: field positions,
-    // missing-mask, and payload JSON all line up; int8 renders BARE so
-    // from_json types it natively
+    // missing-mask, and packed payload cells (schema order) all line up
     val fields = ins.split("\t", -1)
     assert(fields(2) == "I" && fields(0) == "10")
-    assert(fields(7) == """{"id":7,"name":"ann","doc":"big"}""")
+    assert(PackedRow.parse(fields(7)) ==
+      Vector(Some("7"), Some("ann"), Some("big")))
     val uf = upd.split("\t", -1)
     assert(uf(2) == "U" && uf(8) == "doc") // TOAST-unchanged → _missing
-    assert(uf(7) == """{"id":7,"name":"ann2"}""")
+    assert(PackedRow.parse(uf(7)) == Vector(Some("7"), Some("ann2"), None))
+    assert(PackedRow.parse(uf(6)) == Vector(Some("7"), None, None))
     val df = del.split("\t", -1)
-    assert(df(2) == "D" && df(6) == """{"id":7,"name":null,"doc":null}""")
+    assert(df(2) == "D" &&
+      PackedRow.parse(df(6)) == Vector(Some("7"), None, None))
     // truncate expands to one line per relation
     val tr = toEnvelopeLine(Truncate(0, Vector(1, 1)), rel, 13L, 0L, 0L).get
     assert(tr.split("\n").length == 2)
+  }
+
+  test("a direct toEnvelopeLine call renders packed images, never JSON") {
+    val r = Relation(1, "public", "t", 'd', Vector(
+      RelCol(1, "id", 20, -1), RelCol(0, "doc", 114, -1)))
+    val line = toEnvelopeLine(Update(1, Some('O'),
+      Some(Vector(TText("1"), TText("{\"a\":1}"))),
+      Vector(TText("2"), TNull)), _ => r, 5L, 0L, 0L).get
+    val f = line.split("\t", -1)
+    assert(f(6).head == PackedRow.Marker && f(7).head == PackedRow.Marker,
+      line)
+    // a json column's text is one opaque cell
+    assert(PackedRow.parse(f(6)) == Vector(Some("1"), Some("{\"a\":1}")))
+    assert(PackedRow.parse(f(7)) == Vector(Some("2"), None))
   }
 
   test("binary-format tuple values decode typed for fixed-width OIDs") {
@@ -162,12 +179,12 @@ class PgOutputSpec extends AnyFunSuite with PropSpec {
       be(8, _.putDouble(2.5)), TBinary(Vector(1)),
       TBinary(Vector(0xde.toByte, 0xad.toByte)))), _ => r, 1L, 0L, 0L).get
     val after = line.split("\t", -1)(7)
-    assert(after ==
-      """{"id":42,"n":-7,"x":2.5,"ok":true,"raw":"\\xdead"}""")
+    assert(PackedRow.parse(after) == Vector(Some("42"), Some("-7"),
+      Some("2.5"), Some("t"), Some("\\xdead")))
   }
 
   test("binary-format text/temporal/uuid/numeric values render as their " +
-      "PG text forms (graft.core.PgBinary), numerics bare in JSON") {
+      "PG text forms (graft.core.PgBinary) in packed cells") {
     val r = Relation(1, "public", "t", 'd', Vector(
       RelCol(1, "id", 23, -1), RelCol(0, "s", 25, -1),
       RelCol(0, "d", 1082, -1), RelCol(0, "ts", 1184, -1),
@@ -186,9 +203,9 @@ class PgOutputSpec extends AnyFunSuite with PropSpec {
       bin("héllo".getBytes(java.nio.charset.StandardCharsets.UTF_8)),
       be32v(8324), be64v(0L), uuid, num)), _ => r, 1L, 0L, 0L).get
     val after = line.split("\t", -1)(7)
-    assert(after == """{"id":7,"s":"héllo","d":"2022-10-16",""" +
-      """"ts":"2000-01-01 00:00:00+00",""" +
-      """"u":"a0eebc99-9c0b-4ef8-bb6d-6bb9bd380a11","p":1234.5678}""")
+    assert(PackedRow.parse(after) == Vector(Some("7"), Some("héllo"),
+      Some("2022-10-16"), Some("2000-01-01 00:00:00+00"),
+      Some("a0eebc99-9c0b-4ef8-bb6d-6bb9bd380a11"), Some("1234.5678")))
   }
 
   test("DecodeSession: binary frame stream → ordered envelope → live pipeline") {
