@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSessionBridge,
+  SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sinks.GraftTable
+import graft.sinks.{GraftTable, InterpretedLane}
 
 /** Incremental LSH near-duplicate maintenance: keep a near-dup pair set
   * in sync with a mutating corpus by recomputing ONLY what a change
@@ -120,10 +121,10 @@ object IncrementalDedup {
   def applyDelta(spark: SparkSession, bands: GraftTable, pairs: GraftTable,
       corpus: DataFrame, changes: DataFrame, idCol: String, textCol: String,
       seq: String, cfg: Config = Config()): DataFrame =
-    sync(spark, bands, pairs, changes, idCol, textCol, seq,
+    sync(spark, bands, pairs, corpus, changes, idCol, textCol, seq,
       df => Dedup.bandRows(df, "payload", "id",
         cfg.n, cfg.numHashes, cfg.bands),
-      hits => {
+      (corpus, hits) => {
         val candIds = hits.select(col("id_a").as("id"))
           .union(hits.select(col("id_b"))).distinct()
         // shingle AFTER the candidate semi-join so the expensive
@@ -153,7 +154,7 @@ object IncrementalDedup {
       pairs: GraftTable, corpus: DataFrame, changes: DataFrame,
       idCol: String, vecCol: String, seq: String,
       cfg: EmbedConfig = EmbedConfig()): DataFrame =
-    sync(spark, bands, pairs, changes, idCol, vecCol, seq,
+    sync(spark, bands, pairs, corpus, changes, idCol, vecCol, seq,
       df => {
         val sigs = (0 until cfg.nTables).map(t =>
           Similarity.hyperplaneSig(col("payload"), cfg.nPlanes,
@@ -162,7 +163,7 @@ object IncrementalDedup {
           .withColumnRenamed("pos", "band")
           .withColumnRenamed("col", "bh")
       },
-      hits => {
+      (corpus, hits) => {
         val candIds = hits.select(col("id_a").as("id"))
           .union(hits.select(col("id_b"))).distinct()
         // norms once per candidate row, not once per candidate PAIR
@@ -262,26 +263,46 @@ object IncrementalDedup {
 
   /** The shared sync engine: `bandRowsOf` turns (id, payload) rows into
     * (id, band, bh) index rows; `verify` turns candidate (id_a, id_b)
-    * pairs into verified pairs carrying `scoreCol`.
+    * pairs into verified pairs carrying `scoreCol`, reading the corpus
+    * it is given.
     *
-    * CDF contract: `changes` carries AT MOST one pre-image and one
-    * post-image per id (the `rowChangesBetween` net-transition shape);
-    * the band-delta side-sum netting relies on that per-side uniqueness
-    * — duplicate images per id must be LWW-deduplicated upstream.
+    * Lane: a sync whose state tables and input leaves are small
+    * ([[graft.sinks.InterpretedLane]]) rebinds `corpus` and `changes`
+    * once to the interpreted clone of `spark`, so every read, probe,
+    * checkpoint and merge below plans there and compiles almost
+    * nothing; one sync needs more generated classes than Spark's
+    * codegen cache holds, so compiled it recompiled ~140 classes every
+    * sync. The returned frame is bound to `spark` again.
+    *
+    * Netting is exact under duplicate inputs: both aggregations classify
+    * rows by the bit-or of their side flags (1 = new, 2 = old, 3 =
+    * both), so a duplicate post-image (or a pair verified twice through
+    * a duplicate corpus id) stays on its side instead of summing into
+    * another class.
     *
     * `heavyVerify` gates the hits/verified/stale localCheckpoints:
     * those subtrees feed multiple consuming jobs, so when a single
     * evaluation is EXPENSIVE (the text front: shingle hashing + array
-    * intersections + bucket reads) materializing once wins ~30%; when
-    * it is a handful of codegen'd dot products over a delta-scale frame
-    * (the embedding front), re-evaluation is cheaper than checkpoint
-    * storage and the checkpoints only add fixed job latency. */
+    * intersections + bucket reads) materializing once wins ~30%. The
+    * embedding front skips them on the grounds that its verify is a
+    * handful of dot products whose re-evaluation is cheaper than the
+    * checkpoints' fixed job latency. Re-measured for steady syncs, in
+    * either lane, that does not hold: 50 changes over the 2,000 sf0.1
+    * embeddings (4-core host, median of 7) took 2.09 s without the
+    * checkpoints and 1.71 s with them in the interpreted lane, 3.27 s
+    * and 2.79 s compiled; the embedding front's setting is kept until
+    * the bootstrap-heavy `dedup_incremental_embed` gate is re-measured
+    * with it flipped. */
   private def sync(spark: SparkSession, bands: GraftTable,
-      pairs: GraftTable, changes: DataFrame, idCol: String,
-      payloadCol: String, seq: String,
+      pairs: GraftTable, corpus0: DataFrame, changes0: DataFrame,
+      idCol: String, payloadCol: String, seq: String,
       bandRowsOf: DataFrame => DataFrame,
-      verify: DataFrame => DataFrame, scoreCol: String,
+      verify: (DataFrame, DataFrame) => DataFrame, scoreCol: String,
       heavyVerify: Boolean = true): DataFrame = {
+    val session = InterpretedLane.session(s"dedup sync ${bands.root}",
+      spark, Seq(bands, pairs), Seq(corpus0, changes0))
+    val corpus = GraftSessionBridge.rebind(corpus0, session)
+    val changes = GraftSessionBridge.rebind(changes0, session)
     def cp(df: DataFrame): DataFrame =
       if (heavyVerify) df.localCheckpoint(eager = false) else df
     val ch = changes.select(col(idCol).as("id"),
@@ -302,15 +323,15 @@ object IncrementalDedup {
     val oldBands = bandRowsOf(before)
     try {
       val hadData = bands.hasData
-      // net the two sides in ONE aggregation over the tagged union:
-      // (band, bh, id) is unique within each side (one bh per (id,
-      // band)), so the side-sum classifies rows — 1 = new-only (insert),
-      // 2 = old-only (delete), 3 = unmoved (write nothing). The
-      // round-15 shape reconciled with two anti-joins, i.e. two extra
-      // exchanges of the cached delta inside the merge job.
+      // net the two sides in ONE aggregation over the tagged union: the
+      // bit-or of the side flags classifies rows — 1 = new-only
+      // (insert), 2 = old-only (delete), 3 = unmoved (write nothing) —
+      // and stays exact when a side repeats a row (duplicate images).
+      // The round-15 shape reconciled with two anti-joins, i.e. two
+      // extra exchanges of the cached delta inside the merge job.
       val bandDelta = newBands.withColumn("_side", lit(1L))
         .unionByName(oldBands.withColumn("_side", lit(2L)))
-        .groupBy("band", "bh", "id").agg(sum(col("_side")).as("_s"))
+        .groupBy("band", "bh", "id").agg(bit_or(col("_side")).as("_s"))
         .filter(col("_s") =!= 3L)
         .select(col("band"), col("bh"), col("id"),
           when(col("_s") === 1L, "I").otherwise("D").as("_op"))
@@ -335,7 +356,7 @@ object IncrementalDedup {
       val probe = newBands.select(col("band"), col("bh"),
         col("id").as("_pid"))
       val index =
-        (if (hadData) bands.readForProbe(spark, probe)
+        (if (hadData) bands.readForProbe(session, probe)
              .select("band", "bh", "id")
          else newBands.select("band", "bh", "id").limit(0))
           .unionByName(newBands.select("band", "bh", "id"))
@@ -352,7 +373,7 @@ object IncrementalDedup {
           greatest(col("id"), col("_pid")).as("id_b"))
         .distinct())
 
-      val verified = cp(verify(hits))
+      val verified = cp(verify(corpus, hits))
 
       // pair delta: every pair involving a changed row is stale — delete
       // unless re-verified. The mirror makes this a one-sided probe:
@@ -363,18 +384,20 @@ object IncrementalDedup {
       val changed = ch.select(col("id")).distinct()
       val stale =
         if (!pairs.hasData) verified.limit(0).select("id_a", "id_b")
-        else pairs.readForProbe(spark, changed.select(col("id").as("id_a")))
+        else pairs.readForProbe(session,
+            changed.select(col("id").as("id_a")))
           .join(changed, col("id_a") === col("id"), "left_semi")
           .select(least(col("id_a"), col("id_b")).as("id_a"),
             greatest(col("id_a"), col("id_b")).as("id_b"))
           .distinct()
       // verified (side 1, carries the score) and stale (side 2, null
-      // score) net in ONE aggregation — side-sum 1 = newly verified,
+      // score) net in ONE aggregation — side bit-or 1 = newly verified,
       // 3 = re-verified (both insert, score = the verified row's via
       // first ignoreNulls), 2 = stale-only (delete, null score). Exact
-      // because both sides are distinct canonical pair sets. Replaces
-      // the former anti-join (stale − verified) + checkpointed stale —
-      // one less delta exchange and one less materialization per sync.
+      // even when verify emits a pair twice (a duplicate corpus id).
+      // Replaces the former anti-join (stale − verified) + checkpointed
+      // stale — one less delta exchange and one less materialization
+      // per sync.
       val net = verified.select(col("id_a"), col("id_b"),
           col(scoreCol).cast("double").as(scoreCol))
         .withColumn("_side", lit(1L))
@@ -383,7 +406,7 @@ object IncrementalDedup {
           .withColumn("_side", lit(2L)))
         .groupBy("id_a", "id_b")
         .agg(first(col(scoreCol), ignoreNulls = true).as(scoreCol),
-          sum(col("_side")).as("_s"))
+          bit_or(col("_side")).as("_s"))
         .select(col("id_a"), col("id_b"), col(scoreCol),
           when(col("_s") === 2L, "D").otherwise("I").as("_op"))
       // both orientations of every insert AND delete ride one merge
@@ -395,7 +418,7 @@ object IncrementalDedup {
       // band commit must be durable before the sync reports done (the
       // feed consumer's exactly-once contract covers BOTH tables)
       Await.result(fBands, Duration.Inf)
-      verified
+      GraftSessionBridge.rebind(verified, spark)
     } finally newBands.unpersist()
   }
 }

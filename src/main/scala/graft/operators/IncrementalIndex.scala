@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSessionBridge, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sinks.GraftTable
+import graft.sinks.{GraftTable, InterpretedLane}
 
 /** Incremental inverted-index maintenance: keep the BM25 index of
   * [[Retrieval]] (postings, document lengths, corpus statistics) in
@@ -74,12 +74,21 @@ object IncrementalIndex {
     * [[graft.sinks.GraftTable.rowChangesBetween]] net-transition shape.
     * The single-pass netting below relies on that per-side uniqueness;
     * a feed with duplicate images per id must be deduplicated (e.g.
-    * last-writer-wins) before the sync. */
+    * last-writer-wins) before the sync.
+    *
+    * Lane: like [[IncrementalDedup.applyDelta]], a sync whose state
+    * tables and `changes` leaves are small
+    * ([[graft.sinks.InterpretedLane]]) plans and runs in the interpreted
+    * clone of `spark` and compiles almost nothing; compiled, one sync
+    * needed ~96 generated classes and recompiled them every sync. */
   def applyDelta(spark: SparkSession, postings: GraftTable,
       docs: GraftTable, stats: GraftTable, changes: DataFrame,
       idCol: String, tokensCol: String, seq: String): Unit = {
-    val ch = changes.select(col(idCol).as("id"),
-      col(tokensCol).as("toks"), col("_change_type")).cache()
+    val session = InterpretedLane.session(s"index sync ${postings.root}",
+      spark, Seq(postings, docs, stats), Seq(changes))
+    val ch = GraftSessionBridge.rebind(changes, session)
+      .select(col(idCol).as("id"), col(tokensCol).as("toks"),
+        col("_change_type")).cache()
     try {
       val after = ch.filter(col("_change_type")
         .isin("insert", "update_postimage")).select("id", "toks")
@@ -154,8 +163,8 @@ object IncrementalIndex {
               .isin("delete", "update_preimage"), size(col("toks")))
             .otherwise(0)).cast("long")).head()
         def l(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
-        val (curN, curTotal) = currentStats(spark, stats)
-        stats.merge(spark.range(1).select(lit(0).as("k"),
+        val (curN, curTotal) = currentStats(session, stats)
+        stats.merge(session.range(1).select(lit(0).as("k"),
           lit(curN + l(0) - l(1)).as("n"),
           lit(curTotal + l(2) - l(3)).as("total"),
           lit("I").as("_op"), lit(seq).as("_seq")))

@@ -239,20 +239,22 @@ final class CurrentStateSink(rootDir: String, keysOf: String => Seq[String],
 
   override def writeEvents(table: String, events: DataFrame,
       maskHint: Option[Boolean]): Unit =
-    applyEvents(table, events, maskHint, interpreted = None)
+    applyEvents(table, events, maskHint)
 
   /** Whether a batch for `table` takes the interpreted lane: its live
-    * files are below [[CurrentStateSink.InterpretedBelowBytes]]. */
-  private[graft] def interpretedLane(table: String): Boolean =
-    tableFor(table).liveBytesBelow(CurrentStateSink.InterpretedBelowBytes)
+    * files are below [[InterpretedLane.BelowBytes]]. */
+  private[graft] def interpretedLane(table: String): Boolean = {
+    val t = tableFor(table)
+    InterpretedLane.choose(s"cdc apply ${t.root}", Seq(t), Nil)
+  }
 
-  /** [[writeEvents]] with the lane forced (`interpreted` = Some) or
-    * chosen by [[interpretedLane]] (None), and the merges' copy-on-write
-    * lane bounds (`lanes`; specs force those lanes through it).
+  /** [[writeEvents]] with the merges' copy-on-write lane bounds `lanes`
+    * (specs force those lanes through it).
     *
-    * Lanes: a small destination applies the whole batch — decode, LWW,
-    * PK-change expansion, the merge's stats job, the bucket rewrite and
-    * maintenance — in an interpreted clone of the batch's session
+    * Lanes: a small destination ([[interpretedLane]]) applies the whole
+    * batch — decode, LWW, PK-change expansion, the merge's stats job,
+    * the bucket rewrite and maintenance — in an interpreted clone of the
+    * batch's session
     * ([[org.apache.spark.sql.GraftSessionBridge]]). A micro-batch over
     * several small tables otherwise needs more generated classes than
     * Spark's codegen cache holds (100), so every batch evicted and
@@ -261,14 +263,14 @@ final class CurrentStateSink(rootDir: String, keysOf: String => Seq[String],
     * plans: interpreting a table-scale rewrite costs more than the
     * compile saves. The caller's session is never changed. */
   private[graft] def applyEvents(table: String, events0: DataFrame,
-      maskHint: Option[Boolean], interpreted: Option[Boolean],
+      maskHint: Option[Boolean],
       lanes: GraftTable.CowLanes = GraftTable.CowLanes()): Unit = {
     val t = tableFor(table)
     // pause point: wait out a foreign maintenance lease before merging
     // (the reference's pause/resume around external maintenance)
     t.awaitMaintenanceQuiesce(leaseOwner)
     val events =
-      if (interpreted.getOrElse(interpretedLane(table)))
+      if (interpretedLane(table))
         org.apache.spark.sql.GraftSessionBridge.interpreted(events0)
       else events0
     val metaCols = Set("_op", "_commit_lsn", "_tx_ordinal", "_missing")
@@ -401,20 +403,6 @@ final class CurrentStateSink(rootDir: String, keysOf: String => Seq[String],
 
   def read(spark: SparkSession, table: String): DataFrame =
     tableFor(table).read(spark)
-}
-
-object CurrentStateSink {
-  /** Live-file size below which a destination's batches apply
-    * interpreted (see [[CurrentStateSink.applyEvents]]). One 1,300-row
-    * copy-on-write merge into an 8-bucket, four-column table (4-core
-    * host, local[4], median of 9), interpreted / compiled with a warm
-    * codegen cache / compiled with a cold one: 0.71 / 0.73 / 1.19 s at
-    * 1.9 MB of live parquet, 0.93 / 0.86 / 1.40 s at 3.9 MB, 1.12 /
-    * 0.91 / 1.41 s at 8.4 MB, 1.43 / 1.08 / 1.59 s at 12.9 MB and 1.84 /
-    * 1.32 / 1.83 s at 19.3 MB. Interpreted loses to a warm cache from
-    * ~3 MB and beats a cold one up to ~19 MB; at 8 MiB it costs the mean
-    * of the two. */
-  val InterpretedBelowBytes: Long = 8L << 20
 }
 
 /** Append-only changelog sink — the Iceberg/Snowflake/ClickHouse-MergeTree

@@ -34,10 +34,21 @@ object GraftSessionBridge {
 
   /** `df`'s plan bound to the interpreted clone of its session. Cached
     * data is shared: the clone reads the same cache manager. */
-  def interpreted(df: DataFrame): DataFrame = df match {
-    case ds: ClassicDataset[Row @unchecked] =>
-      ClassicDataset.ofRows(interpretedClone(ds.sparkSession), ds.logicalPlan)
-  }
+  def interpreted(df: DataFrame): DataFrame =
+    rebind(df, interpretedSession(df.sparkSession))
+
+  /** The interpreted clone of `source`. */
+  def interpretedSession(source: SparkSession): SparkSession =
+    source match { case s: ClassicSession => interpretedClone(s) }
+
+  /** `df`'s analyzed plan bound to `session` (`df` itself when it is
+    * already bound there); `session` plans and runs it from then on. */
+  def rebind(df: DataFrame, session: SparkSession): DataFrame =
+    (df, session) match {
+      case (ds, s) if ds.sparkSession eq s => ds
+      case (ds: ClassicDataset[Row @unchecked], s: ClassicSession) =>
+        ClassicDataset.ofRows(s, ds.logicalPlan)
+    }
 
   private def interpretedClone(source: ClassicSession): ClassicSession =
     clones.synchronized {

@@ -90,6 +90,49 @@ class IncrementalDedupSpec extends SparkSpec {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet == pairSet)
   }
 
+  private def pairSet(pairs: graft.sinks.GraftTable) =
+    IncrementalDedup.readPairs(spark, pairs)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+
+  test("pair netting is exact under a duplicate corpus id") {
+    val bands = IncrementalDedup.bandTable(tmp("inc-dupid-bands"), 16)
+    val pairs = IncrementalDedup.pairTable(tmp("inc-dupid-pairs"), 4)
+    val state = Map(1L -> s"$base alpha", 2L -> s"$base beta", 3L -> other)
+    // doc 1 is listed twice in the corpus, so verify emits (1,2) twice;
+    // a side-sum would read that as a stale-only pair and delete it
+    IncrementalDedup.applyDelta(spark, bands, pairs,
+      corpusDf(state).unionByName(corpusDf(Map(1L -> state(1L)))),
+      changesDf(Map.empty, state), "doc_id", "text", "0000000000000001/0",
+      cfg)
+    assert(pairSet(pairs) == rebuild(state) &&
+      pairSet(pairs).contains((1L, 2L)), pairSet(pairs))
+  }
+
+  test("band netting is exact under duplicate images") {
+    // the embedding front bands each image row (the text front groups
+    // signatures by id first), so a repeated post-image repeats its band
+    // rows; a side-sum would read them as old-only and delete them
+    val ecfg = IncrementalDedup.EmbedConfig(threshold = 0.9)
+    val bands = IncrementalDedup.bandTable(tmp("inc-dupimg-bands"), 8)
+    val pairs = IncrementalDedup.pairTable(tmp("inc-dupimg-pairs"), 4)
+    val vecs = Map(1L -> Seq(1f, 0f, 0f, 0.01f), 2L -> Seq(0f, 1f, 0f, 0f),
+      3L -> Seq(0f, 0f, 1f, 0.02f), 4L -> Seq(0f, 0f, 1f, 0.03f))
+    def embed(ids: Long*) = ids.map(i => (i, vecs(i)))
+    def inserts(ids: Long*) = ids.map(i => (i, vecs(i), "insert"))
+      .toDF("vec_id", "embedding", "_change_type")
+    def sync(corpus: Seq[(Long, Seq[Float])], changes: DataFrame, v: Long) =
+      IncrementalDedup.applyEmbedDelta(spark, bands, pairs,
+        corpus.toDF("vec_id", "embedding"), changes, "vec_id", "embedding",
+        f"$v%016x/0", ecfg)
+    sync(embed(1L, 2L), inserts(1L, 2L), 1L)
+    sync(embed(1L, 2L, 3L), inserts(3L).unionByName(inserts(3L)), 2L)
+    assert(bands.read(spark).filter(col("id") === 3L).count() ==
+      ecfg.nTables)
+    // doc 4 is a near-duplicate of doc 3: the probe must find 3's bands
+    sync(embed(1L, 2L, 3L, 4L), inserts(4L), 3L)
+    assert(pairSet(pairs) == Set((3L, 4L)), pairSet(pairs))
+  }
+
   test("embedding pairs track the corpus through inserts, updates, deletes") {
     val ecfg = IncrementalDedup.EmbedConfig(threshold = 0.9, nPlanes = 4,
       nTables = 8)

@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.PackedImage.img
 import graft.SparkSpec
 import graft.core.{ColumnSpec, SchemaRegistry, TableSchemaV}
-import graft.sinks.{CdcSink, CurrentStateSink, GraftTable}
+import graft.sinks.{CdcSink, CurrentStateSink, GraftTable, InterpretedLane}
 import graft.sources.CdcLogSource
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
@@ -12,7 +12,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** The current-state sink's small-destination lanes. Batches for a
-  * destination below [[CurrentStateSink.InterpretedBelowBytes]] of live
+  * destination below [[InterpretedLane.BelowBytes]] of live
   * files apply in an interpreted clone of their session, so a steady
   * stream compiles nothing; larger destinations keep compiled plans. A
   * copy-on-write merge collects a batch of at most
@@ -74,7 +74,9 @@ class InterpretedApplySpec extends SparkSpec {
       writeEvents(table, events, None)
     override def writeEvents(table: String, events: DataFrame,
         maskHint: Option[Boolean]): Unit =
-      inner.applyEvents(table, events, maskHint, Some(interpreted), lanes)
+      InterpretedLane.forcing(interpreted) {
+        inner.applyEvents(table, events, maskHint, lanes)
+      }
     override def truncateTable(table: String): Unit =
       inner.truncateTable(table)
   }
@@ -214,13 +216,13 @@ class InterpretedApplySpec extends SparkSpec {
       .withColumn("name", lit("x")).withColumn("age", lit(1)))
     assert(sink.interpretedLane("users"))
     // incompressible text, well over the crossover
-    val rows = (CurrentStateSink.InterpretedBelowBytes * 2 / 1024).toInt
+    val rows = (InterpretedLane.BelowBytes * 2 / 1024).toInt
     sink.writeTableRows("big", spark.range(0, rows).toDF("id")
       .withColumn("name", concat((0 until 16).map(i =>
         sha2(concat(col("id").cast("string"), lit(s"-$i")), 256)): _*))
       .withColumn("age", lit(1)))
-    assert(!sink.tableFor("big")
-      .liveBytesBelow(CurrentStateSink.InterpretedBelowBytes))
+    assert(sink.tableFor("big").liveBytesUpTo(InterpretedLane.BelowBytes) >=
+      InterpretedLane.BelowBytes)
     assert(!sink.interpretedLane("big"))
   }
 }
